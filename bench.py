@@ -30,7 +30,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
 
 def read_cpu_stat() -> tuple[int, int]:
@@ -80,7 +81,7 @@ def main() -> None:
     except ValueError:
         sf = 0.1
 
-    kg_dir = f"/root/repo/.kg_bench_r{replicas}"
+    kg_dir = os.path.join(ROOT, f".kg_bench_r{replicas}")
     paths = ensure_fixture(kg_dir, replicas=replicas)
 
     gate_max = float(os.environ.get("SPARK_GRAFT_BENCH_GATE_STEAL", "2.0"))

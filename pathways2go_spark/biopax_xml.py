@@ -18,9 +18,10 @@ exchange/src/test/resources/biopax/):
 
   span kind          BioPAX class
   ----------------   -------------------------------------------------
-  pathway            bp:Pathway (+bp:pathwayComponent, mesh
-                     RelationshipXref marks a disease pathway — the
-                     isDisease gate of BioPaxtoGO.java's disease check)
+  pathway            bp:Pathway (+bp:pathwayComponent, a mesh
+                     D004194 RelationshipXref marks a disease pathway —
+                     the isDisease gate of BioPaxtoGO.java's disease
+                     check; other mesh xrefs do not)
   reaction           bp:BiochemicalReaction (bp:conversionDirection,
                      bp:eCNumber, bp:left/bp:right; GO
                      UnificationXref = direct GO typing [A12 skos
@@ -770,7 +771,7 @@ def _parse_record(
                         put("ensembl", xid)
         elif t == "xref":
             xc, db, xid = _xref_of(c, idx)
-            if db == _DISEASE_DB:
+            if db == _DISEASE_DB and xid == _DISEASE_ID:
                 is_disease = True
             elif db == "go" and xc == "UnificationXref":
                 put("goXref", _curie_to_go_token(xid))

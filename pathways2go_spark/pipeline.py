@@ -4,21 +4,28 @@ Mirrors BioPaxtoGO.convert + wrapAndWrite (BioPaxtoGO.java:167-343, :549-639)
 but set-at-a-time over all models at once: one distributed DAG instead of a
 per-file loop with per-rule model rebuilds.
 
-Stage B runs on one of two physical paths with identical semantics:
+Input size alone picks the physical path, through two thresholds of
+run_pipeline; every path has the same rule semantics:
 
-  local (default for bounded models)   ONE shuffle: groupBy(model_id)
-      .cogroup(drug_reactions).applyInPandas over Arrow batches — the
-      reference's per-named-graph rule loop (GoCAM.java:974-999), which is
-      embarrassingly parallel across models (stage_b_local.py).
-  distributed (mega-model skew path)   each rule as global DataFrame
-      self-joins (stage_b.py) — ~25 shuffles, but no per-model memory
-      bound; used for models whose stage-A triple count exceeds
-      `local_threshold` (stage_b_mode="auto" routes per model).
+  span_threshold    a document with at most this many spans takes the
+      fused path: span parse + stage A + stage B in ONE mapInPandas over
+      documents, zero shuffles (stage_a_local.py). Bigger documents are
+      parsed and run through stage A as distributed operators (ingest.py,
+      stage_a.py).
+  local_threshold   of the models those bigger documents produce, one
+      with at most this many stage-A triples runs stage B in ONE shuffle:
+      groupBy(model_id).cogroup(drug_reactions).applyInPandas — the
+      reference's per-named-graph rule loop (GoCAM.java:974-999), which
+      is embarrassingly parallel across models (stage_b_local.py). A
+      bigger model runs each rule as global DataFrame self-joins
+      (stage_b.py) — ~25 shuffles, but no per-model memory bound.
 
-Checkpoint discipline: the stage-A triple set is hash-partitioned by
-model_id and checkpointed once; the distributed rule chain checkpoints per
-rule to cut lineage (the cluster version writes each stage to a
-partitioned table via sinks.py for resume)."""
+A threshold of -1 sends everything past it to the distributed side.
+
+Checkpoint discipline: the distributed side checkpoints its span parse
+and its stage-A triple set once; the distributed rule chain checkpoints
+its per-rule hit sets to cut lineage (the cluster version writes each
+stage to a partitioned table via sinks.py for resume)."""
 
 from __future__ import annotations
 
@@ -52,7 +59,7 @@ class PipelineResult:
 
 
 def _stage_b_distributed(
-    t: DataFrame, drugs: DataFrame, dims: Dims, checkpoint: bool
+    t: DataFrame, drugs: DataFrame, dims: Dims
 ) -> tuple[DataFrame, DataFrame]:
     # AQE stays ON for the chain: measured on the 150k-reaction mega doc
     # (tools/skew_bench.py corpus) the chain runs 37.5s with AQE vs
@@ -64,7 +71,7 @@ def _stage_b_distributed(
         # by rule matches, not corpus size). Materializing each hit set
         # truncates its join-tree lineage to a leaf, so downstream
         # references replay a cached scan, not the joins.
-        return df.localCheckpoint(eager=True) if checkpoint else df
+        return df.localCheckpoint(eager=True)
 
     # Delta-virtual chain: the full triple table is NEVER materialized
     # between rules. Each snapshot t_k is a virtual plan —
@@ -73,8 +80,8 @@ def _stage_b_distributed(
     #   + unions of the (small, materialized) add sets
     # — so every rule's match job costs one scan of base plus cheap
     # broadcast probes, and the chain pays exactly ONE full-table
-    # shuffle: the final merge_triples set-dedupe. merge=False end to
-    # end; duplicate keys that accumulate are harmless to the match sets
+    # shuffle: the final merge_triples set-dedupe. No dedupe in between;
+    # duplicate keys that accumulate are harmless to the match sets
     # (hit/add/delete sets are distinct()ed) and collapse in the final
     # merge. Ordering is preserved because apply_delta composes
     # anti-joins/unions in rule order (a later node-delete also removes
@@ -134,13 +141,14 @@ def _stage_b_distributed(
     # (VTriples: only the base carries the accumulated probe stack — the
     # adds are already materialized leaves — so the rebase writes the
     # base alone and the key-uniqueness invariant is preserved.)
-    if checkpoint and sum(census.values()) > 1_000_000:
+    mega = sum(census.values()) > 1_000_000
+    if mega:
         vt = B.VTriples(ck(vt.base), vt.adds)
     # B4 hot-type salt rides the same size routing: only mega inputs
     # can put enough rows on one (model, reaction, type) key to matter,
     # and only there is the salt-x replication of the small per-reaction
     # type tables worth paying (see b4_b5_delta docstring).
-    b4_salt = 16 if sum(census.values()) > 1_000_000 else None
+    b4_salt = 16 if mega else None
     # B4/B5 + B6 superstep: B6 matches only inv-reg edges and regulator-
     # node types, which the B4/B5 delta never adds or deletes (it touches
     # causally_upstream / provides_input / directly_regulates edges
@@ -206,44 +214,14 @@ def _stage_b_distributed(
     # internally; the returned plan is a leaf scan + a small anti-join,
     # cheap for B9/B11 to re-reference.
     t = B.merge_virtual(vt, ck=ck)
-    t = B.b9_clean_unconnected(t, merge=False)
+    t = B.b9_clean_unconnected(t)
     t = B.b11_model_gate(t, dims)
     return t, audit
 
 
-def _stage_b_local(
-    t: DataFrame, drugs: DataFrame, dims: Dims, checkpoint: bool = False,
-    prepared: PreparedDims | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    if prepared is not None:
-        bc = prepared.bc
-
-        def run(left, right):
-            if len(left) == 0:
-                return left.iloc[0:0]
-            # bc.value unpickles once per worker process (broadcast
-            # registry cache), not per task — see PreparedDims
-            return BL.apply_rules_local(left, set(right["reaction"]),
-                                        bc.value[1])
-    else:
-        local_dims = BL.build_local_dims(
-            dims.onto_ancestors.toPandas(), dims.complex_parts.toPandas()
-        )
-
-        def run(left, right):
-            if len(left) == 0:
-                return left.iloc[0:0]
-            return BL.apply_rules_local(left, set(right["reaction"]), local_dims)
-
-    out = (
-        t.groupBy("model_id")
-        .cogroup(drugs.groupBy("model_id"))
-        .applyInPandas(run, schema=_TRIPLE_SCHEMA)
-    )
-    if checkpoint:
-        # materialize the Python pass NOW (see _fused docstring: Python
-        # stages must run before the distributed rule chain)
-        out = out.localCheckpoint(eager=True)
+def _split_audit(out: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The Python passes emit audit rows in-band (pred == AUDIT_PRED);
+    split them from the triples."""
     triples = out.filter(F.col("pred") != BL.AUDIT_PRED)
     audit = out.filter(F.col("pred") == BL.AUDIT_PRED).select(
         F.col("rule"),
@@ -252,6 +230,27 @@ def _stage_b_local(
         F.col("obj").alias("detail"),
     )
     return triples, audit
+
+
+def _stage_b_local(
+    t: DataFrame, drugs: DataFrame, prepared: PreparedDims
+) -> DataFrame:
+    """Per-model Python rules over the stage-A triples; triples and
+    in-band audit rows (see _split_audit)."""
+    bc = prepared.bc
+
+    def run(left, right):
+        if len(left) == 0:
+            return left.iloc[0:0]
+        # bc.value unpickles once per worker process (broadcast
+        # registry cache), not per task — see PreparedDims
+        return BL.apply_rules_local(left, set(right["reaction"]), bc.value[1])
+
+    return (
+        t.groupBy("model_id")
+        .cogroup(drugs.groupBy("model_id"))
+        .applyInPandas(run, schema=_TRIPLE_SCHEMA)
+    )
 
 
 class PreparedDims(NamedTuple):
@@ -284,22 +283,10 @@ def prepare_local_dims(dims: Dims) -> PreparedDims:
     return PreparedDims(a_dims, b_dims, sc.broadcast((a_dims, b_dims)))
 
 
-def _fused(
-    documents: DataFrame, dims: Dims, prepared: tuple | None = None,
-    checkpoint: bool = False
-) -> tuple[DataFrame, DataFrame]:
+def _fused(documents: DataFrame, prepared: PreparedDims) -> DataFrame:
     """Zero-shuffle path: span parse + stage A + stage B fused into one
-    mapInPandas over documents (stage_a_local.py).
-
-    checkpoint=True materializes the Python pass eagerly. Use it whenever
-    the distributed rule chain will ALSO run in this pipeline: measured on
-    this host, a Python (Arrow-duplex) stage scheduled AFTER the chain's
-    burst of small eager JVM jobs runs 5-10x slower than the identical
-    stage before it (task threads blocked in the Arrow socket ping-pong;
-    second run recovers). Ordering Python stages first sidesteps the
-    pathology entirely and costs one block-manager write of the result."""
-    if prepared is None:
-        prepared = prepare_local_dims(dims)
+    mapInPandas over documents (stage_a_local.py); triples and in-band
+    audit rows (see _split_audit)."""
     # project the two struct fields the parser consumes BEFORE the UDF:
     # nested-schema pruning then drops media_ref/offset at the parquet
     # scan (ReadSchema: spans:array<struct<kind,text>>) and the Arrow
@@ -311,112 +298,29 @@ def _fused(
         F.col("spans.kind").alias("kinds"),
         F.col("spans.text").alias("texts"),
     )
-    out = flat.mapInPandas(
-        AL.fused_pipeline_udf(bc=prepared.bc), schema=_TRIPLE_SCHEMA
+    return flat.mapInPandas(
+        AL.fused_pipeline_udf(prepared.bc), schema=_TRIPLE_SCHEMA
     )
-    if checkpoint:
-        out = out.localCheckpoint(eager=True)
-    triples = out.filter(F.col("pred") != BL.AUDIT_PRED)
-    audit = out.filter(F.col("pred") == BL.AUDIT_PRED).select(
-        F.col("rule"),
-        "model_id",
-        F.col("subj").alias("reaction"),
-        F.col("obj").alias("detail"),
-    )
-    return triples, audit
 
 
-def run_pipeline(
-    spark: SparkSession,
-    documents: DataFrame,
-    dims: Dims,
-    checkpoint: bool = True,
-    stage_b_mode: str = "auto",
-    local_threshold: int = 500_000,
-    stage_a_mode: str = "auto",
-    span_threshold: int = 500_000,
-    prepared: tuple | None = None,
+def _distributed(
+    spark: SparkSession, documents: DataFrame, dims: Dims,
+    local_threshold: int, prepared: PreparedDims,
 ) -> PipelineResult:
-    """stage_a_mode:
-      "auto"        fused per-doc path for documents whose span count is
-                    within `span_threshold`; bigger docs go through the
-                    distributed operators (skew/memory defense).
-      "local"       fused path for everything.
-      "distributed" distributed stage A + stage_b_mode routing.
-    """
-    if stage_a_mode == "local":
-        tt, audit = _fused(documents, dims, prepared)
-        empty_drugs = documents.sparkSession.createDataFrame(
-            [], "model_id string, reaction string"
-        )
-        return PipelineResult(triples=tt, audit=audit, drug_reactions=empty_drugs)
-    if stage_a_mode == "auto":
-        # route on size(spans.kind), not size(spans): the span COUNT is
-        # derivable from any single struct field, and extracting just
-        # `kind` lets nested-schema pruning narrow the routing scan to
-        # spans:array<struct<kind:string>> — the text field is the bulk
-        # of the corpus bytes, so the routing probe reads a small
-        # fraction of the table instead of all of it. (The predicate
-        # still can't push down to row-group stats — array lengths
-        # aren't in parquet statistics — so the probe is a scan either
-        # way; this makes it a cheap one.)
-        n_spans = F.size(F.col("spans.kind"))
-        small = documents.filter(n_spans <= span_threshold)
-        big = documents.filter(n_spans > span_threshold)
-        if big.isEmpty():
-            # common case (no mega docs): ONE kind-pruned probe scan and
-            # no checkpoint write — the big-doc slice is only
-            # materialized when it exists (below), so the no-skew corpus
-            # pays no routing materialization job per run.
-            ts, audit_s = _fused(small, dims, prepared)
-            empty_drugs = documents.sparkSession.createDataFrame(
-                [], "model_id string, reaction string"
-            )
-            return PipelineResult(
-                triples=ts, audit=audit_s, drug_reactions=empty_drugs
-            )
-        # mega docs present: materialize the routed big-doc slice ONCE —
-        # without this every job of the distributed branch (span-parse
-        # checkpoint, rule probes) re-scans the WHOLE corpus' spans
-        # column just to find the few mega docs. Big docs are few by
-        # definition of the threshold, so the checkpoint is small.
-        if checkpoint:
-            big = big.localCheckpoint(eager=True)
-        # mega docs present: run the fused Python pass CONCURRENTLY with
-        # the distributed chain on driver threads. The Python pass starts
-        # at t=0 (never scheduled after the chain's JVM burst — the
-        # ordering that triggers the measured Arrow-duplex stall, see
-        # _fused docstring) and the two passes share the executor; the
-        # wall time is max(fused, distributed) instead of their sum.
-        def _run_fused():
-            return _fused(small, dims, prepared, checkpoint=checkpoint)
-
-        def _run_big():
-            return run_pipeline(
-                spark, big, dims, checkpoint=checkpoint,
-                stage_b_mode=stage_b_mode, local_threshold=local_threshold,
-                stage_a_mode="distributed", prepared=prepared,
-            )
-
-        (ts, audit_s), rb = B.par(_run_fused, _run_big)
-        return PipelineResult(
-            triples=ts.unionByName(rb.triples),
-            audit=audit_s.unionByName(rb.audit.select(*_AUDIT_COLS)),
-            drug_reactions=rb.drug_reactions,
-        )
-
-    # distributed path: spread span parsing across the cluster — the docs
-    # here are mega-documents (few rows, huge span arrays), so file splits
-    # give no parallelism and the parse must be repartitioned explicitly
-    elements, links = ingest(documents, repartition=spark.sparkContext.defaultParallelism)
-    if checkpoint:
-        # materialize the span parse ONCE — every stage-A loop iteration and
-        # eager checkpoint otherwise re-runs the whole ingest lineage.
-        # links is RE-DERIVED from the checkpointed elements (ingest's
-        # links plan would otherwise replay the whole chunked span parse
-        # a second time just to explode the link columns)
-        elements = elements.localCheckpoint(eager=True)
-        links = ingest_links(elements).localCheckpoint(eager=True)
+    """Distributed span parse + stage A, then stage B per model: the
+    Python rules up to `local_threshold` stage-A triples, the DataFrame
+    rule chain above it."""
+    # spread span parsing across the cluster — the docs here are
+    # mega-documents (few rows, huge span arrays), so file splits give
+    # no parallelism and the parse must be repartitioned explicitly
+    elements, _ = ingest(documents, repartition=spark.sparkContext.defaultParallelism)
+    # materialize the span parse ONCE — every stage-A loop iteration and
+    # eager checkpoint otherwise re-runs the whole ingest lineage.
+    # links is RE-DERIVED from the checkpointed elements (ingest's
+    # links plan would otherwise replay the whole chunked span parse
+    # a second time just to explode the link columns)
+    elements = elements.localCheckpoint(eager=True)
+    links = ingest_links(elements).localCheckpoint(eager=True)
     # NOTE: stage A's dedupe shuffle is load-bearing for the rule chain,
     # not just set semantics: a raw multiset duplicates the shared-
     # molecule node triples once per referencing reaction, and any rule
@@ -429,27 +333,16 @@ def run_pipeline(
     # into a single partition (the skew we are defending against). The
     # local path's cogroup shuffles by model_id itself; the distributed
     # rules shuffle on their own wider (model_id, node/type) keys.
-    t = sa.triples
-    drugs = sa.drug_reactions
-    if checkpoint:
-        # materialize stage A once: every stage-B rule references the
-        # triple table several times, and an unmaterialized ~25-join
-        # stage-A plan re-analyzed per reference explodes the driver.
-        # t and drugs are independent -> one concurrent checkpoint round.
-        t, drugs = B.par(
-            lambda: t.localCheckpoint(eager=True),
-            lambda: drugs.localCheckpoint(eager=True),
-        )
+    # Materialize stage A once: every stage-B rule references the
+    # triple table several times, and an unmaterialized ~25-join
+    # stage-A plan re-analyzed per reference explodes the driver.
+    # t and drugs are independent -> one concurrent checkpoint round.
+    t, drugs = B.par(
+        lambda: sa.triples.localCheckpoint(eager=True),
+        lambda: sa.drug_reactions.localCheckpoint(eager=True),
+    )
 
-    if stage_b_mode == "distributed":
-        tt, audit = _stage_b_distributed(t, drugs, dims, checkpoint)
-        return PipelineResult(triples=tt, audit=audit, drug_reactions=drugs)
-
-    if stage_b_mode == "local":
-        tt, audit = _stage_b_local(t, drugs, dims, prepared=prepared)
-        return PipelineResult(triples=tt, audit=audit, drug_reactions=drugs)
-
-    # auto: route mega-models (per-model stage-A triple count above the
+    # route mega-models (per-model stage-A triple count above the
     # threshold) through the distributed rules — the skew defense — and
     # everything else through the one-shuffle local path. The count is
     # over the DEDUPED stage-A set (extract() defaults dedupe=True, and
@@ -463,7 +356,7 @@ def run_pipeline(
         .localCheckpoint(eager=True)
     )
     if big.isEmpty():
-        tt, audit = _stage_b_local(t, drugs, dims, prepared=prepared)
+        tt, audit = _split_audit(_stage_b_local(t, drugs, prepared))
         return PipelineResult(triples=tt, audit=audit, drug_reactions=drugs)
 
     t_small = t.join(big, "model_id", "left_anti")
@@ -471,14 +364,83 @@ def run_pipeline(
     d_small = drugs.join(big, "model_id", "left_anti")
     d_big = drugs.join(big, "model_id", "left_semi")
     # Python cogroup pass first + materialized, JVM rule chain second —
-    # same ordering rule as the fused/_fused composition (see _fused)
-    ts, audit_s = _stage_b_local(t_small, d_small, dims, checkpoint=checkpoint,
-                                 prepared=prepared)
-    tb, audit_b = _stage_b_distributed(t_big, d_big, dims, checkpoint)
+    # the same ordering rule as in run_pipeline
+    ts, audit_s = _split_audit(
+        _stage_b_local(t_small, d_small, prepared).localCheckpoint(eager=True)
+    )
+    tb, audit_b = _stage_b_distributed(t_big, d_big, dims)
     return PipelineResult(
         triples=ts.unionByName(tb),
         audit=audit_s.unionByName(audit_b.select(*_AUDIT_COLS)),
         drug_reactions=drugs,
+    )
+
+
+def run_pipeline(
+    spark: SparkSession,
+    documents: DataFrame,
+    dims: Dims,
+    span_threshold: int = 500_000,
+    local_threshold: int = 500_000,
+    prepared: PreparedDims | None = None,
+) -> PipelineResult:
+    """GO-CAM triples, rule audit rows and drug reactions of `documents`.
+
+    Routing is by span_threshold and local_threshold alone (see the
+    module docstring): documents with more than `span_threshold` spans
+    run stage A distributed, and of their models those with more than
+    `local_threshold` stage-A triples run the distributed rule chain;
+    everything else takes the fused per-document path. Pass `prepared`
+    (prepare_local_dims) to reuse the dictionary broadcast across runs
+    in one session."""
+    if prepared is None:
+        prepared = prepare_local_dims(dims)
+    # route on size(spans.kind), not size(spans): the span COUNT is
+    # derivable from any single struct field, and extracting just
+    # `kind` lets nested-schema pruning narrow the routing scan to
+    # spans:array<struct<kind:string>> — the text field is the bulk
+    # of the corpus bytes, so the routing probe reads a small
+    # fraction of the table instead of all of it. (The predicate
+    # still can't push down to row-group stats — array lengths
+    # aren't in parquet statistics — so the probe is a scan either
+    # way; this makes it a cheap one.)
+    n_spans = F.size(F.col("spans.kind"))
+    small = documents.filter(n_spans <= span_threshold)
+    big = documents.filter(n_spans > span_threshold)
+    if big.isEmpty():
+        # common case (no mega docs): ONE kind-pruned probe scan and
+        # no checkpoint write — the big-doc slice is only
+        # materialized when it exists (below), so the no-skew corpus
+        # pays no routing materialization job per run.
+        ts, audit_s = _split_audit(_fused(small, prepared))
+        empty_drugs = documents.sparkSession.createDataFrame(
+            [], "model_id string, reaction string"
+        )
+        return PipelineResult(triples=ts, audit=audit_s, drug_reactions=empty_drugs)
+    # mega docs present: materialize the routed big-doc slice ONCE —
+    # without this every job of the distributed branch (span-parse
+    # checkpoint, rule probes) re-scans the WHOLE corpus' spans
+    # column just to find the few mega docs. Big docs are few by
+    # definition of the threshold, so the checkpoint is small.
+    big = big.localCheckpoint(eager=True)
+
+    # ...and run the fused Python pass CONCURRENTLY with the distributed
+    # side on driver threads, materialized eagerly. Measured on a shared
+    # host, a Python (Arrow-duplex) stage scheduled AFTER the rule
+    # chain's burst of small eager JVM jobs runs 5-10x slower than the
+    # identical stage before it (task threads blocked in the Arrow
+    # socket ping-pong; a second run recovers). Started at t=0, the
+    # Python pass is never scheduled after that burst, the two passes
+    # share the executor, and the wall time is max(fused, distributed)
+    # instead of their sum.
+    (ts, audit_s), rb = B.par(
+        lambda: _split_audit(_fused(small, prepared).localCheckpoint(eager=True)),
+        lambda: _distributed(spark, big, dims, local_threshold, prepared),
+    )
+    return PipelineResult(
+        triples=ts.unionByName(rb.triples),
+        audit=audit_s.unionByName(rb.audit.select(*_AUDIT_COLS)),
+        drug_reactions=rb.drug_reactions,
     )
 
 

@@ -6,8 +6,8 @@ file at a time, BioPaxtoGO.convert BioPaxtoGO.java:167-343) and every
 stage-B rule is per-model, so for documents whose span count is bounded
 the whole pipeline is embarrassingly parallel: broadcast the §1.5
 dictionaries, stream Arrow batches of documents, emit final triples.
-Documents above `span_threshold` are routed through the distributed
-operators instead (pipeline.run_pipeline stage_a_mode="auto").
+pipeline.run_pipeline routes documents above `span_threshold` spans
+through the distributed operators instead.
 
 This module mirrors stage_a.py operator for operator (A1-A27; see its
 file:line cites) — tests assert identical output on the fixture corpus.
@@ -23,7 +23,7 @@ import pandas as pd
 from . import vocab as V
 from .ingest import LINK_SPECS, RECORD_KINDS
 from .stage_a import ENTITY_KINDS, EVENT_KINDS
-from .stage_b_local import LocalDims, apply_rules_rows
+from .stage_b_local import apply_rules_rows
 
 _LINKS_BY_KIND: dict[str, list] = {}
 for _k, _link, _key, _qual in LINK_SPECS:
@@ -495,26 +495,21 @@ def extract_doc(doc_id: str, kinds, texts, D: StageADims) -> tuple[list, set]:
     return T, drug_reactions
 
 
-def fused_pipeline_udf(D: StageADims | None = None, B: LocalDims | None = None,
-                       bc=None):
+def fused_pipeline_udf(bc):
     """mapInPandas function: documents batches -> final triples + in-band
     audit rows. (doc parse + A1-A27 + B10,B1-B9,B11, all per doc.)
 
-    Pass EITHER (D, B) directly, or `bc` = a pyspark Broadcast of
-    (StageADims, LocalDims). With `bc`, the task closure carries only the
-    broadcast handle: the multi-MB dictionaries move once per executor
-    and unpickle once per reused Python worker (broadcast registry
-    cache), instead of being re-shipped and re-unpickled per task
-    (measured 7.2 MB / 0.22 s per task — a serial tax that scales with
-    task count, not data)."""
+    `bc` is a pyspark Broadcast of (StageADims, LocalDims). The task
+    closure carries only the broadcast handle: the multi-MB dictionaries
+    move once per executor and unpickle once per reused Python worker
+    (broadcast registry cache), instead of being re-shipped and
+    re-unpickled per task (measured 7.2 MB / 0.22 s per task — a serial
+    tax that scales with task count, not data)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import gc
 
-        if bc is not None:
-            D_, B_ = bc.value
-        else:
-            D_, B_ = D, B
+        D_, B_ = bc.value
         cols = ["model_id", "subj", "pred", "obj", "evidence", "rule"]
         # Batch the cyclic GC: the per-doc rule core allocates millions of
         # short-lived dicts/tuples per Arrow batch, all freed by

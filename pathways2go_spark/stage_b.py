@@ -11,7 +11,7 @@ per pathway, GoCAM.java:1020 et al.).
 Snapshot discipline (SURVEY.md §4d): B4 deliberately does NOT refresh the
 model before B5 (comment GoCAM.java:1504-1506), so B4 and B5 are matched
 against the SAME post-B3 snapshot and their add/delete sets applied
-together — reproduced exactly by `b4_b5`.
+together — reproduced exactly by `b4_b5_delta`.
 
 Every join carries model_id in the key: triples are hash-partitioned by
 model_id, so rule self-joins co-partition and never shuffle the fact
@@ -55,7 +55,6 @@ def apply_delta(
     adds: list[DataFrame] | None = None,
     deletes: list[DataFrame] | None = None,
     node_deletes: list[DataFrame] | None = None,
-    merge: bool = True,
 ) -> DataFrame:
     """Apply add/delete sets. deletes: (model_id,subj,pred,obj) keys;
     node_deletes: (model_id, node) -> remove every triple referencing the
@@ -67,14 +66,15 @@ def apply_delta(
     turning every anti-join into a shuffle-free BroadcastHashJoin of the
     fact table.
 
-    merge=False defers the set-semantics dedupe: the result may carry
-    duplicate (model_id,subj,pred,obj) keys (rule matches are themselves
-    deduped via distinct() on the hit/add/delete sets, so duplicates only
-    multiply intermediate rows, never change any rule's match set). The
-    production chain goes further: it tracks state as a VTriples
-    (apply_delta_v) and finishes with merge_virtual, so the fact table
-    never enters a hash exchange at all; this plain-DataFrame form is
-    kept for single-delta callers and as the property-test reference."""
+    No set-semantics dedupe: the result may carry duplicate
+    (model_id,subj,pred,obj) keys (rule matches are themselves deduped
+    via distinct() on the hit/add/delete sets, so duplicates only
+    multiply intermediate rows, never change any rule's match set);
+    callers that need a set finish with merge_triples. The production
+    chain tracks state as a VTriples (apply_delta_v) and finishes with
+    merge_virtual, so the fact table never enters a hash exchange at
+    all; this plain-DataFrame form serves single-delta callers and is
+    the property-test reference."""
     t = triples
     # set difference is associative: union the call's delete key sets
     # first so the fact table pays ONE broadcast anti-join per key shape
@@ -103,7 +103,7 @@ def apply_delta(
             "left_anti")
     for a in adds or []:
         t = t.unionByName(a)
-    return merge_triples(t) if merge else t
+    return t
 
 
 def merge_triples(t: DataFrame) -> DataFrame:
@@ -156,7 +156,7 @@ def apply_delta_v(
     node_deletes: list[DataFrame] | None = None,
 ) -> VTriples:
     """apply_delta with the base/adds split kept explicit. Semantics are
-    identical to apply_delta(view, ..., merge=False): delete key sets
+    identical to apply_delta(view, ...): delete key sets
     anti-join every component accumulated SO FAR (base and prior adds —
     a later rule's delete also removes an earlier rule's adds, as in the
     reference's in-place mutation), then the call's own adds are
@@ -286,11 +286,6 @@ def b10_delta(t: DataFrame, drug_reactions: DataFrame, ck=_ident) -> dict:
     return {"node_deletes": [ck(dr.unionByName(neigh).distinct())]}
 
 
-def b10_remove_drug_reactions(t: DataFrame, drug_reactions: DataFrame,
-                              merge: bool = True) -> DataFrame:
-    return apply_delta(t, **b10_delta(t, drug_reactions), merge=merge)
-
-
 # ----------------------------------------------------------------------
 # B1: molecular_event + enabled_by -> molecular function
 # (inferMolecularFunctionFromEnablers, GoCAM.java:1001-1025)
@@ -304,10 +299,6 @@ def b1_delta(t: DataFrame, ck=_ident) -> dict:
         "adds": [_adds(hits, F.col("subj"), V.TYPE, V.MF_ROOT, "B1")],
         "deletes": [hits],
     }
-
-
-def b1_mf_from_enablers(t: DataFrame, merge: bool = True) -> DataFrame:
-    return apply_delta(t, **b1_delta(t), merge=merge)
 
 
 # ----------------------------------------------------------------------
@@ -352,10 +343,6 @@ def b2_delta(t: DataFrame, ck=_ident) -> dict:
             _adds(chosen, F.col("loc_node"), V.TYPE, F.col("loc"), "B2"),
         ],
     }
-
-
-def b2_occurs_in(t: DataFrame, merge: bool = True) -> DataFrame:
-    return apply_delta(t, **b2_delta(t), merge=merge)
 
 
 # ----------------------------------------------------------------------
@@ -420,10 +407,6 @@ def b3_delta(t: DataFrame, ck=_ident, probe: bool = True) -> dict:
                         F.col("r2").alias("obj")),
         ],
     }
-
-
-def b3_regulates_via_output_regulates(t: DataFrame, merge: bool = True) -> DataFrame:
-    return apply_delta(t, **b3_delta(t), merge=merge)
 
 
 # ----------------------------------------------------------------------
@@ -538,10 +521,6 @@ def b4_b5_delta(t: DataFrame, dims: Dims, ck=_ident, salt: int | None = None) ->
     }
 
 
-def b4_b5_causal_rewrites(t: DataFrame, dims: Dims, merge: bool = True) -> DataFrame:
-    return apply_delta(t, **b4_b5_delta(t, dims), merge=merge)
-
-
 # ----------------------------------------------------------------------
 # B6: small-molecule regulators (inferSmallMoleculeRegulators,
 # GoCAM.java:1667-1747): chemical & not nucleic-acid -> has_small_molecule_
@@ -585,13 +564,6 @@ def b6_delta(t: DataFrame, dims: Dims, ck=_ident) -> tuple[dict, DataFrame]:
     return delta, audit
 
 
-def b6_small_molecule_regulators(
-    t: DataFrame, dims: Dims, merge: bool = True
-) -> tuple[DataFrame, DataFrame]:
-    delta, audit = b6_delta(t, dims)
-    return apply_delta(t, **delta, merge=merge), audit
-
-
 # ----------------------------------------------------------------------
 # B7: delete complexes with active units (deleteComplexesWithActiveUnits,
 # GoCAM.java:1749-1757): complex has_part X and some reaction
@@ -611,10 +583,6 @@ def b7_delta(t: DataFrame, ck=_ident) -> dict:
     return {"node_deletes": [ck(doomed)]}
 
 
-def b7_delete_complexes_with_active_units(t: DataFrame, merge: bool = True) -> DataFrame:
-    return apply_delta(t, **b7_delta(t), merge=merge)
-
-
 # ----------------------------------------------------------------------
 # B8: delete disallowed relations (deleteDisallowedRelations,
 # GoCAM.java:1759-1783): all located_in edges + their location nodes,
@@ -631,10 +599,6 @@ def b8_pred_filter(t: DataFrame) -> DataFrame:
                                         V.INV_NEG_REG))
 
 
-def b8_delete_disallowed(t: DataFrame, merge: bool = True) -> DataFrame:
-    return b8_pred_filter(apply_delta(t, **b8_delta(t), merge=merge))
-
-
 # ----------------------------------------------------------------------
 # B9: unconnected-node cleanup (cleanOutUnconnectedNodes, GoCAM.java:1974-2007)
 # ----------------------------------------------------------------------
@@ -642,7 +606,7 @@ def b8_delete_disallowed(t: DataFrame, merge: bool = True) -> DataFrame:
 def b9_orphans(t: DataFrame) -> DataFrame:
     """(model_id, node) set of unconnected nodes. Both inputs are
     DISTINCT node sets, so the computation is insensitive to duplicate
-    triple keys — callers may evaluate it on an unmerged (merge=False)
+    triple keys — callers may evaluate it on an unmerged
     delta-chain table and fold the set-dedupe into the same final pass."""
     edges = t.filter(F.col("pred").isin(V.EDGE_PREDS))
     connected = (
@@ -656,8 +620,8 @@ def b9_orphans(t: DataFrame) -> DataFrame:
     return candidates.join(connected, ["model_id", "node"], "left_anti")
 
 
-def b9_clean_unconnected(t: DataFrame, merge: bool = True) -> DataFrame:
-    return apply_delta(t, node_deletes=[b9_orphans(t)], merge=merge)
+def b9_clean_unconnected(t: DataFrame) -> DataFrame:
+    return apply_delta(t, node_deletes=[b9_orphans(t)])
 
 
 # ----------------------------------------------------------------------
@@ -833,12 +797,12 @@ def b12_transport_inference(t: DataFrame, dims: Dims) -> DataFrame:
               "left_semi")
     )
     io_nodes = io_edges.select("model_id", F.col("obj").alias("node")).distinct()
-    return apply_delta(
+    return merge_triples(apply_delta(
         t,
         adds=adds,
         deletes=[old_ty.select(*_KEY), io_edges.select(*_KEY)],
         node_deletes=[io_nodes],
-    )
+    ))
 
 
 # ----------------------------------------------------------------------
@@ -907,7 +871,7 @@ def b13_enabler_from_upstream(t: DataFrame, dims: Dims) -> DataFrame:
         F.lit(V.HAS_INPUT).alias("pred"), F.col("input").alias("obj"),
     )
     adds = [_adds(gated, F.col("reaction"), V.ENABLED_BY, F.col("input"), "B13")]
-    return apply_delta(t, adds=adds, deletes=[dels])
+    return merge_triples(apply_delta(t, adds=adds, deletes=[dels]))
 
 
 # ----------------------------------------------------------------------
@@ -973,4 +937,4 @@ def b14_regulation_by_sequestration(t: DataFrame) -> DataFrame:
     pair = pair.join(au, ["model_id", "enabler", "r2"], "left_anti")
 
     adds = [_adds(pair, F.col("r1"), V.DIRECTLY_NEG_REGULATES, F.col("r2"), "B14")]
-    return apply_delta(t, adds=adds)
+    return merge_triples(apply_delta(t, adds=adds))

@@ -9,10 +9,11 @@ executor memory — this module runs the identical rule sequence inside a
 single `groupBy(model_id).cogroup(...).applyInPandas` (ONE shuffle, Arrow
 batches, no per-row Python on the Spark side).
 
-Routing (pipeline.run_pipeline stage_b_mode="auto"): models whose stage-A
-triple count exceeds `local_threshold` are routed through the distributed
-rules instead — the skew defense for mega-models. Both paths implement
-the same semantics; tests assert identical output.
+Routing (pipeline.run_pipeline): of the models from documents routed to
+distributed stage A, those whose stage-A triple count exceeds
+`local_threshold` run the distributed rules instead — the skew defense for
+mega-models. Both paths implement the same semantics; tests assert
+identical output.
 
 Ontology dims are handed over as plain dict/set closures (bounded
 dictionaries — the same data stage_b.py broadcasts).

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .dims import Dims
 from .ingest import DOCUMENTS_SCHEMA
-from .pipeline import run_pipeline
+from .pipeline import prepare_local_dims, run_pipeline
 from .sinks import write_triples
 
 
@@ -54,11 +54,14 @@ def start_kg_stream(
     stream itself is exactly-once via checkpointLocation. Returns the
     StreamingQuery (caller awaits/stops)."""
     stream = read_document_stream(spark, docs_path, max_files_per_trigger)
+    # one dictionary build + broadcast for the whole stream, not one per
+    # micro-batch
+    prepared = prepare_local_dims(dims)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        res = run_pipeline(spark, batch_df, dims)
+        res = run_pipeline(spark, batch_df, dims, prepared=prepared)
         # one bucketed sub-sink per micro-batch: a replayed batch
         # overwrites exactly itself (content-keyed ids -> byte-identical),
         # never a neighbour batch's buckets
@@ -388,13 +391,14 @@ def start_snapshot_stream(
     the same batch id can never produce two snapshots. Returns the
     StreamingQuery."""
     stream = read_document_stream(spark, docs_path, max_files_per_trigger)
+    prepared = prepare_local_dims(dims)  # once per stream, as in start_kg_stream
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         from .sinks import append_snapshot
 
-        res = run_pipeline(spark, batch_df, dims)
+        res = run_pipeline(spark, batch_df, dims, prepared=prepared)
         triples = res.triples.select(
             "model_id", "subj", "pred", "obj"
         ).distinct()

@@ -695,13 +695,13 @@ def ngram_novelty(df: DataFrame, col: str = "text", n: int = 3) -> DataFrame:
     (doc_id, n_grams, n_novel, novelty)."""
     from pathways2go_spark.dedup import _gram_array, _shingles
 
+    # a NULL-text doc has no n-grams: drop it, as the DuckDB oracle does
+    # (_gram_array would turn NULL text into one empty-string gram)
+    df = df.filter(F.col(col).isNotNull())
     sh = _shingles(df, col, n)
-    # NULL text yields a NULL gram array (size() -> NULL); the explode
-    # path (and the DuckDB oracle) drops such docs entirely, so filter
-    # them here too to keep the outputs identical on nullable corpora.
     grams = df.select(
         "doc_id", F.size(_gram_array(col, n)).cast("long").alias("n_grams")
-    ).filter(F.col("n_grams").isNotNull())
+    )
     novel = (
         sh.groupBy("shingle")
         .agg(F.min("doc_id").alias("first_doc"))

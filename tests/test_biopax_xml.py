@@ -309,3 +309,16 @@ def test_foreign_file_without_hint(spark):
     for s in spans:
         assert s["offset"] == off
         off += len(s["text"]) + 1
+
+
+
+def test_foreign_mesh_xref_is_not_the_disease_marker():
+    """Only the writer's mesh D004194 xref marks a disease pathway; any
+    other MeSH xref (here D009369) leaves isDisease=0."""
+    xml = f"""<rdf:RDF xmlns:rdf="{BX.RDF}" xmlns:bp="{BX.BP}">
+ <bp:Pathway rdf:about="#p1"><bp:xref><bp:RelationshipXref rdf:about="#x1">
+  <bp:db>MeSH</bp:db><bp:id>D009369</bp:id>
+ </bp:RelationshipXref></bp:xref></bp:Pathway>
+</rdf:RDF>"""
+    _, spans = BX.rdfxml_to_spans(xml, doc_id="mesh")
+    assert "isDisease=0" in spans[0]["text"]

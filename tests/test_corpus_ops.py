@@ -918,14 +918,17 @@ def test_lsh_candidates_no_all_pairs(spark):
 
 def test_ngram_novelty_first_vs_twin(spark):
     # doc 0 introduces all its trigrams (novelty 1.0); doc 1 is an exact
-    # twin (novelty 0.0); doc 2 shares nothing (novelty 1.0)
+    # twin (novelty 0.0); doc 2 shares nothing (novelty 1.0); doc 3 has
+    # NULL text and, as in the DuckDB oracle, no row at all
     rows = [
         (0, "alpha beta gamma delta epsilon"),
         (1, "alpha beta gamma delta epsilon"),
         (2, "one two three four five"),
+        (3, None),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {r["doc_id"]: r for r in textops.ngram_novelty(df, n=3).collect()}
+    assert sorted(got) == [0, 1, 2]
     assert got[0]["novelty"] == 1.0 and got[0]["n_grams"] == 3
     assert got[1]["novelty"] == 0.0 and got[1]["n_novel"] == 0
     assert got[2]["novelty"] == 1.0

@@ -357,10 +357,11 @@ def test_bench_heads_are_registered_queries():
     import os
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, root)
     import __spark_entry__ as E
 
-    src = open(os.path.join("/root/repo", "bench.py")).read()
+    src = open(os.path.join(root, "bench.py")).read()
     tree = ast.parse(src)
     heads = None
     for node in ast.walk(tree):

@@ -1,6 +1,6 @@
 """End-to-end KG pipeline tests: golden-triple P/R (the reference's test
 strategy, BioPaxtoGOTest.java), targeted per-rule assertions, audit rows,
-and determinism."""
+determinism, and equal output on every physical path."""
 
 from __future__ import annotations
 
@@ -14,15 +14,12 @@ from pathways2go_spark.pipeline import (
     precision_recall,
     run_pipeline,
 )
-from tests.conftest import FIXTURE_DIR
+from tests.conftest import FIXTURE_DIR, assert_routing_cases
 
 
 @pytest.fixture(scope="module")
-def result(spark, documents, fixture_paths):
-    dims = load_dims(spark, FIXTURE_DIR)
-    res = run_pipeline(spark, documents, dims)
-    res.triples.cache().count()
-    return res
+def result(default_run):
+    return default_run
 
 
 @pytest.fixture(scope="module")
@@ -132,35 +129,23 @@ def test_determinism(spark, documents, expected):
     assert pr["precision"] == 1.0 and pr["recall"] == 1.0
 
 
-def _same(a, b, cols):
-    a, b = a.select(*cols).distinct(), b.select(*cols).distinct()
-    return a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+def test_physical_path_equivalence(spark, documents, result, expected):
+    """The fully distributed path and the hybrid (distributed stage A +
+    per-model Python stage B) give the default fused run's triple and
+    audit sets, and that run has P/R 1.0."""
+    pr = precision_recall(result.triples, expected)
+    assert pr["precision"] == 1.0 and pr["recall"] == 1.0, pr
+    everything = 10**9
+    assert_routing_cases(spark, documents, result, [
+        (-1, everything),       # hybrid
+        (-1, -1),               # fully distributed
+    ])
 
 
-def test_physical_path_equivalence(spark, documents):
-    """All three physical paths — fused per-doc mapInPandas, distributed
-    stage A + per-model stage B, fully distributed DataFrame rules — must
-    produce the identical triple + audit sets."""
-    dims = load_dims(spark, FIXTURE_DIR)
-    fused = run_pipeline(spark, documents, dims, stage_a_mode="local")
-    hybrid = run_pipeline(spark, documents, dims, stage_a_mode="distributed",
-                          stage_b_mode="local")
-    dist = run_pipeline(spark, documents, dims, stage_a_mode="distributed",
-                        stage_b_mode="distributed")
-    key = ["model_id", "subj", "pred", "obj"]
-    audit_cols = ["rule", "model_id", "reaction", "detail"]
-    assert _same(fused.triples, dist.triples, key)
-    assert _same(hybrid.triples, dist.triples, key)
-    assert _same(fused.audit, dist.audit, audit_cols)
-    assert _same(hybrid.audit, dist.audit, audit_cols)
-
-
-def test_auto_routing_splits_big_models(spark, documents):
-    """auto modes with tiny thresholds route everything through the
-    distributed paths — output must be unchanged."""
-    dims = load_dims(spark, FIXTURE_DIR)
-    res = run_pipeline(spark, documents, dims, span_threshold=3,
-                       stage_b_mode="auto", local_threshold=5)
-    exp = spark.read.parquet(f"{FIXTURE_DIR}/expected_triples.parquet")
-    pr = precision_recall(res.triples, exp)
+def test_auto_routing_splits_big_models(spark, documents, result, expected):
+    """Tiny thresholds route the big docs and models through the
+    distributed paths, so all three paths run in one job — output must be
+    unchanged."""
+    assert_routing_cases(spark, documents, result, [(3, 5)])
+    pr = precision_recall(result.triples, expected)
     assert pr["precision"] == 1.0 and pr["recall"] == 1.0, pr

@@ -70,21 +70,6 @@ def test_ingest_is_deterministic(spark, docs):
     assert sorted(map(tuple, a_l.collect())) == sorted(map(tuple, b_l.collect()))
 
 
-# ----------------------------------------------------------------------
-# Routing-seam property: the fused/distributed routing thresholds
-# (span_threshold for stage A, local_threshold for stage B) are pure
-# physical-plan switches — the triple SET must be identical on either
-# side of every boundary. Exercised at the exact seam values for the
-# golden fixture (largest doc just inside / just outside the fused
-# path; largest model just inside / just outside the local rules).
-# ----------------------------------------------------------------------
-
-def _keyset(df):
-    return sorted(
-        map(tuple, df.select("model_id", "subj", "pred", "obj").collect())
-    )
-
-
 def test_b45_b6_superstep_node_disjointness(spark, documents, fixture_paths):
     """Fusion-order safety invariant for the B4/B5+B6 superstep
     (pipeline.py): apply_delta applies B6's node_deletes before B4/B5's
@@ -132,55 +117,22 @@ def test_b45_b6_superstep_node_disjointness(spark, documents, fixture_paths):
     assert all("~" in n for _, n in inv_subjects)
 
 
-def test_routing_seams_produce_identical_triples(spark, documents, fixture_paths):
-    import pyspark.sql.functions as F
+def test_routing_seams_produce_identical_triples(spark, documents, default_run):
+    """Routing-seam property: the fused/distributed routing thresholds
+    (span_threshold for stage A, local_threshold for stage B) are pure
+    physical-plan switches — the triple and audit sets are identical on
+    either side of every boundary of the golden fixture: a genuine
+    fused/hybrid mix, only the largest doc(s) routed out, and a
+    hybrid/distributed mix with only the largest model(s) routed out."""
+    from tests.conftest import assert_routing_cases, routing_seams
 
-    from pathways2go_spark.dims import load_dims
-    from pathways2go_spark.ingest import ingest as _ingest
-    from pathways2go_spark.pipeline import run_pipeline
-    from pathways2go_spark.stage_a import extract
-    from tests.conftest import FIXTURE_DIR
-
-    dims = load_dims(spark, FIXTURE_DIR)
-    ref = _keyset(
-        run_pipeline(spark, documents, dims, stage_a_mode="local").triples
-    )
-    assert ref, "golden fixture produced no triples"
-
-    # --- stage-A seam: span_threshold ---------------------------------
-    sizes = sorted(
-        r[0] for r in documents.select(F.size("spans")).collect()
-    )
-    m, mid = sizes[-1], sizes[len(sizes) // 2]
-    # m: every doc fused (inclusive boundary); m-1: largest doc(s) flip
-    # to the distributed path; mid: genuinely mixed; 0: all distributed
-    for thr in {0, mid, m - 1, m}:
-        got = _keyset(
-            run_pipeline(
-                spark, documents, dims, stage_a_mode="auto",
-                span_threshold=thr,
-            ).triples
-        )
-        assert got == ref, f"span_threshold={thr} changed the triple set"
-
-    # --- stage-B seam: local_threshold --------------------------------
-    elements, links = _ingest(documents)
-    sa_counts = sorted(
-        r[0]
-        for r in extract(elements, links, dims)
-        .triples.groupBy("model_id").count().select("count").collect()
-    )
-    bm = sa_counts[-1]
-    # bm: every model local (inclusive); bm-1: largest model(s) flip to
-    # the distributed rules; 0: all distributed
-    for thr in {0, bm - 1, bm}:
-        got = _keyset(
-            run_pipeline(
-                spark, documents, dims, stage_a_mode="distributed",
-                stage_b_mode="auto", local_threshold=thr,
-            ).triples
-        )
-        assert got == ref, f"local_threshold={thr} changed the triple set"
+    m, mid, bm = routing_seams(spark, documents)
+    everything = 10**9
+    assert_routing_cases(spark, documents, default_run, [
+        (mid, everything),      # fused + hybrid
+        (m - 1, everything),    # only the largest doc(s) routed out
+        (-1, bm - 1),           # hybrid + distributed
+    ])
 
 
 # ----------------------------------------------------------------------
@@ -235,8 +187,7 @@ def test_merge_virtual_matches_plain_chain(spark, script):
              ).distinct()] if dels else [])
         nd = ([spark.createDataFrame(nodes, "model_id string, node string")]
               if nodes else [])
-        t_plain = B.apply_delta(t_plain, adds=a, deletes=d,
-                                node_deletes=nd, merge=False)
+        t_plain = B.apply_delta(t_plain, adds=a, deletes=d, node_deletes=nd)
         vt = B.apply_delta_v(vt, adds=a, deletes=d, node_deletes=nd)
     expected = B.merge_triples(t_plain)
     actual = B.merge_virtual(vt)

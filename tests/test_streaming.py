@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 
 from pathways2go_spark.dims import load_dims
 from pathways2go_spark.pipeline import precision_recall, run_pipeline
@@ -40,6 +41,32 @@ def test_stream_matches_batch(spark, documents, fixture_paths, tmp_path_factory)
     assert pr["precision"] == 1.0 and pr["recall"] == 1.0, pr
 
 
+@pytest.mark.parametrize("starter", ["start_kg_stream", "start_snapshot_stream"])
+def test_stream_prepares_dims_once(spark, documents, fixture_paths, tmp_path,
+                                   monkeypatch, starter):
+    """The micro-batches of one stream share one dictionary build and
+    broadcast."""
+    from pathways2go_spark import pipeline, streaming
+
+    calls = []
+    real = pipeline.prepare_local_dims
+    counted = lambda dims: calls.append(dims) or real(dims)  # noqa: E731
+    monkeypatch.setattr(pipeline, "prepare_local_dims", counted)
+    monkeypatch.setattr(streaming, "prepare_local_dims", counted, raising=False)
+    ids = sorted(r.doc_id for r in documents.select("doc_id").collect())[:4]
+    for i, wave in enumerate((ids[:2], ids[2:])):
+        documents.filter(documents.doc_id.isin(wave)).coalesce(1).write.parquet(
+            str(tmp_path / "docs" / f"wave={i}"))
+    dims = load_dims(spark, os.path.dirname(fixture_paths["documents"]))
+    q = getattr(streaming, starter)(
+        spark, str(tmp_path / "docs" / "wave=*"), dims, str(tmp_path / "out"),
+        str(tmp_path / "ck"), max_files_per_trigger=1,
+    )
+    q.awaitTermination(300)
+    assert sum(p["numInputRows"] > 0 for p in q.recentProgress) == 2
+    assert len(calls) == 1
+
+
 def test_stateful_dedup_stream(spark, tmp_path_factory):
     """applyInPandasWithState cross-batch dedup: a duplicate document
     arriving in a LATER micro-batch is dropped by the keyed state."""
@@ -66,6 +93,10 @@ def test_stateful_dedup_stream(spark, tmp_path_factory):
     pq.write_table(pa.Table.from_pylist(
         [doc("doc-A3", "alpha"), doc("doc-C", "gamma")],
         schema=DOCUMENTS_SCHEMA), str(src / "b2.parquet"))
+    # the file source takes the oldest file first, and the two writes often
+    # share a millisecond mtime: date b2 after b1 to make it batch two
+    b1_mtime = (src / "b1.parquet").stat().st_mtime
+    os.utime(src / "b2.parquet", (b1_mtime + 1, b1_mtime + 1))
 
     q = start_dedup_stream(
         spark, str(src), str(base / "out"), str(base / "ck"),

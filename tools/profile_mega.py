@@ -125,7 +125,7 @@ def main() -> None:
 
     v5 = clock("b7_b8", b78)
     t6 = clock("merge", lambda: ck(B.merge_virtual(v5, ck=ck)))
-    t7 = clock("b9", lambda: B.b9_clean_unconnected(t6, merge=False))
+    t7 = clock("b9", lambda: B.b9_clean_unconnected(t6))
     t8 = clock("b11_gate_count", lambda: B.b11_model_gate(t7, dims).count())
 
     phases["total"] = round(sum(phases.values()), 2)

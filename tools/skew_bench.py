@@ -6,7 +6,7 @@ thing the pipeline must defuse explicitly. The defenses in this repo:
   1. size routing — documents above `span_threshold` skip the fused
      per-doc path (which would pin one Python worker for minutes) and run
      through the distributed stage-A/B operators (pipeline.run_pipeline
-     stage_a_mode="auto");
+     routes by span count);
   2. join-key extension — every stage-B self-join carries model_id (+
      reaction / type) in the key, so a hub TYPE never becomes a single
      shuffle key (the reference's same-pathway guard, SURVEY.md §4);
