@@ -33,6 +33,7 @@ duplicate structure of the doubled corpus instead.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -59,7 +60,8 @@ from pathways2go_spark.pipeline import run_pipeline
 
 # Deterministic synthetic KG corpus (BASELINE.json: "synthesise it
 # deterministically at small scale"). Written once, reused across calls.
-KG_FIXTURE_DIR = "/root/repo/.kg_fixture"
+REPO_DIR = os.path.dirname(os.path.abspath(__file__))
+KG_FIXTURE_DIR = os.path.join(REPO_DIR, ".kg_fixture")
 DOC_OFFSET = 10_000_000  # doc_id shift for the self-dup corpus trick
 
 _kg_cache: dict[int, tuple[DataFrame, DataFrame]] = {}
@@ -258,7 +260,6 @@ def q_kg_obo_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts. Two front doors (parquet / go-basic.obo), one truth.
     The reduction is computed driver-side from the ontology dim —
     ontology-bounded, the same class as every dims builder collect."""
-    import os
     import tempfile
 
     from pathways2go_spark.sources import obo_ancestors
@@ -375,12 +376,8 @@ def q_kg_untyped_reactions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_kg_xref_map(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = _kg(spark)[0]
-    return (
-        t.filter(F.col("pred") == V.EXACT)
-        .groupBy("model_id", F.col("subj").alias("node"))
-        .agg(F.concat_ws(",", F.sort_array(F.collect_set("obj"))).alias("xrefs"))
-    )
+    m = G.xref_map(_kg(spark)[0])
+    return m.withColumn("xrefs", F.concat_ws(",", "xrefs"))
 
 
 def q_kg_motif_census(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -973,8 +970,6 @@ def q_sim_ann_lsh_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     of only the matching bucket directories — the 100 TB layout, where
     ann_topk_lsh's on-the-fly bucketing would still scan everything.
     Same results as sim_ann_lsh_topk (shared oracle)."""
-    import os
-
     q = _query_vec(spark, sf_dir)
     idx_path = f"/tmp/p2g_ann_idx/lsh_{os.path.basename(os.path.normpath(sf_dir))}"
     SIM.write_lsh_index(_emb(spark, sf_dir), idx_path, LSH_PLANES, EMB_DIM)
@@ -1068,7 +1063,6 @@ def q_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the oracle, not just by a unit test. Fresh store/checkpoint per
     call; the streamed registers are bit-identical to batch partials
     because the fold is register-wise max of md5-derived values."""
-    import os
     import shutil
     import tempfile
 
@@ -3283,8 +3277,6 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     share every minhash, so every band collides and the signature
     agreement is 32/32 — est_jaccard exactly 1.0; the fresh docs find
     no 0.99-agreement match. Oracle is the closed-form twin map."""
-    import os
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
@@ -3425,7 +3417,7 @@ _PROFILE_COLS = [
 ]
 
 
-KG_SNAP_STORE = "/root/repo/.kg_snap_store"
+KG_SNAP_STORE = os.path.join(REPO_DIR, ".kg_snap_store")
 
 
 def q_kg_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:

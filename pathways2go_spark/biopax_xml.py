@@ -674,9 +674,11 @@ def _parse_record(
     pairs: list[tuple[str, str]] = [("id", eid)]
     vals: dict[str, list[str]] = {"id": [eid]}
     is_disease = False
-    # per-entity QUEUES, consumed in occurrence order — a complex with a
-    # repeated component id ('A:2,A:3') carries one Stoichiometry per
-    # occurrence, and last-wins collapsing would corrupt the coefficients
+    # a Stoichiometry right after a bp:component of its entity belongs
+    # to that occurrence (the writer's layout: 'A,A:2' stays in place);
+    # any other one joins a per-entity QUEUE consumed in occurrence order
+    # (foreign files) — last-wins collapsing would corrupt repeated ids
+    at_comp: dict[int, str] = {}
     stoich: dict[str, list[str]] = {}
 
     def put(key: str, val: str) -> None:
@@ -686,8 +688,9 @@ def _parse_record(
             vals[key] = [val]
             pairs.append((key, ""))
 
+    t = ""
     for c in el:
-        t = _tag(c)
+        prev_t, t = t, _tag(c)
         if t == "displayName":
             put("displayName", c.text or "")
         elif t == "conversionDirection":
@@ -738,7 +741,10 @@ def _parse_record(
                         pe = _res_id(s)
                     elif _tag(s) == "stoichiometricCoefficient":
                         coeff = s.text or ""
-                if pe:
+                comps = vals.get("components", [])
+                if pe and prev_t == "component" and comps[-1] == pe:
+                    at_comp[len(comps) - 1] = coeff
+                elif pe:
                     stoich.setdefault(pe, []).append(coeff)
         elif t == "cellularLocation":
             put("location", _vocab_term(c, idx))
@@ -801,10 +807,11 @@ def _parse_record(
 
     def val_of(key: str) -> str:
         vv = vals.get(key, [""])
-        if key == "components" and stoich:
+        if key == "components" and (at_comp or stoich):
             vv = [
-                f"{v}:{stoich[v].pop(0)}" if stoich.get(v) else v
-                for v in vv
+                f"{v}:{at_comp[i]}" if i in at_comp
+                else f"{v}:{stoich[v].pop(0)}" if stoich.get(v) else v
+                for i, v in enumerate(vv)
             ]
         return ",".join(vv) if key in _CSV_KEYS else vv[0]
 

@@ -998,7 +998,7 @@ def ensure_fixture(out_dir: str, replicas: int = 1) -> dict[str, str]:
     # derived artifacts must not outlive the fixture they derive from:
     # anything in out_dir that write_fixture didn't just produce is a
     # tool-written derivative (reference_gpad from tests, mega_doc from
-    # profile_mega/skew_bench, sink/stream scratch dirs) and can be stale
+    # skew_bench, sink/stream scratch dirs) and can be stale
     # against the regenerated DOCUMENTS_SCHEMA or corpus — drop them all.
     import shutil
 

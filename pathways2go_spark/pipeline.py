@@ -122,7 +122,7 @@ def _stage_b_distributed(
     d1, d2, d3 = B.par(
         lambda: B.b1_delta(t1, ck=ck),
         lambda: B.b2_delta(t1, ck=ck),
-        lambda: (B.b3_delta(t1, ck=ck, probe=False) if has_reg
+        lambda: (B.b3_delta(t1, ck=ck) if has_reg
                  else {"adds": [], "deletes": []}),
     )
     vt = B.apply_delta_v(
@@ -321,12 +321,12 @@ def _distributed(
     # a second time just to explode the link columns)
     elements = elements.localCheckpoint(eager=True)
     links = ingest_links(elements).localCheckpoint(eager=True)
-    # NOTE: stage A's dedupe shuffle is load-bearing for the rule chain,
-    # not just set semantics: a raw multiset duplicates the shared-
+    # NOTE: extract()'s dedupe shuffle is load-bearing for the rule
+    # chain, not just set semantics: a raw multiset duplicates the shared-
     # molecule node triples once per referencing reaction, and any rule
     # joining the fact table against itself through those keys (B5's
     # exactMatch join) multiplies match rows by the duplication factor —
-    # measured as a hang on the 150k-reaction mega doc. Keep dedupe=True.
+    # measured as a hang on the 150k-reaction mega doc.
     sa = extract(elements, links, dims)
 
     # NOTE: no repartition("model_id") here — a mega model would collapse
@@ -345,9 +345,9 @@ def _distributed(
     # route mega-models (per-model stage-A triple count above the
     # threshold) through the distributed rules — the skew defense — and
     # everything else through the one-shuffle local path. The count is
-    # over the DEDUPED stage-A set (extract() defaults dedupe=True, and
-    # dedupe is load-bearing — see the NOTE above), so the threshold is
-    # calibrated against distinct triples per model, not the raw multiset.
+    # over the DEDUPED stage-A set (extract() always dedupes — see the
+    # NOTE above), so the threshold is calibrated against distinct
+    # triples per model, not the raw multiset.
     big = (
         t.groupBy("model_id")
         .count()

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from . import vocab as V
 from .dims import Dims, sssom_best
+from .stage_b import par
 
 ENTITY_KINDS = ["protein", "small_molecule", "complex", "entity_set", "dna", "rna"]
 EVENT_KINDS = ["reaction", "degradation", "template_reaction", "interaction"]
@@ -81,16 +82,16 @@ def _union(frames: list[DataFrame]) -> DataFrame:
 # ----------------------------------------------------------------------
 
 def pathways_and_events(
-    elements: DataFrame, links: DataFrame, disease_empty: bool | None = None
+    elements: DataFrame, links: DataFrame, disease_empty: bool
 ) -> tuple[DataFrame, DataFrame]:
     """A1/A2/A5: kept pathways + event membership.
 
     Disease ancestry (keepPathway BioPaxtoGO.java:480-534): a pathway is
     dropped when itself or any ancestor is flagged disease. Propagated by
     an iterative bounded-depth join (pathway DAGs are shallow).
-    disease_empty: caller-provided probe result (extract() batches it
-    with the active-unit probe into one concurrent round); None runs the
-    probe here."""
+    disease_empty: whether no pathway is flagged disease (extract()
+    batches that probe with the active-unit probe into one concurrent
+    round); True skips the propagation loop."""
     pw = elements.filter(F.col("kind") == "pathway").select(
         "doc_id",
         F.col("elem_id").alias("pid"),
@@ -112,12 +113,9 @@ def pathways_and_events(
         .distinct()
     )
     bad = pw.filter("is_disease").select("doc_id", "pid")
-    # short-circuit: no disease seed -> no propagation loop. One cheap
-    # probe instead of a join+checkpoint job per would-be iteration (the
-    # distributed path mostly carries clean mega-docs, and every blocking
-    # driver job on that path is measured overhead — tools/profile_mega).
-    if disease_empty is None:
-        disease_empty = bad.isEmpty()
+    # short-circuit: no disease seed -> no propagation loop, instead of a
+    # join+checkpoint job per would-be iteration (the distributed path
+    # mostly carries clean mega-docs)
     if not disease_empty:
         for _ in range(12):
             more = (
@@ -338,14 +336,11 @@ def extract(
     import_upstream_controllers: bool = False,
     test_pathways: list[str] | None = None,
     explode_entity_sets: bool = False,
-    dedupe: bool = True,
 ) -> StageA:
-    from .stage_b import par as _probe_par
-
     # the two input emptiness probes (disease pathways, active-unit
     # links) are independent scans of the checkpointed inputs — one
     # concurrent driver round instead of two sequential blocking jobs
-    disease_empty, au_empty = _probe_par(
+    disease_empty, au_empty = par(
         lambda: elements.filter(
             (F.col("kind") == "pathway") & (_attr("isDisease") == "1")
         ).isEmpty(),
@@ -370,9 +365,7 @@ def extract(
     # the two master tables are independent — materialize them on
     # concurrent driver threads (stage_b.par) instead of two sequential
     # blocking jobs
-    from .stage_b import par as _par
-
-    event_pathway, ent = _par(
+    event_pathway, ent = par(
         lambda: event_pathway.localCheckpoint(eager=True),
         lambda: ent.localCheckpoint(eager=True),
     )
@@ -475,7 +468,7 @@ def extract(
     # io and ctl are independent join trees over the same checkpointed
     # inputs — one concurrent materialization round instead of two
     # sequential blocking jobs
-    io, ctl = _par(
+    io, ctl = par(
         lambda: io.localCheckpoint(eager=True),
         lambda: ctl.localCheckpoint(eager=True),
     )
@@ -811,17 +804,7 @@ def extract(
         .distinct()
     )
 
-    u = _union(frames)
-    if not dedupe:
-        # raw multiset — ONLY safe for consumers that never join the fact
-        # table against itself: shared-entity node triples repeat once per
-        # referencing reaction, so e.g. B5's exactMatch self-join would
-        # multiply match rows by the duplication factor (measured as a
-        # hang on the 150k-reaction mega doc). The pipeline always
-        # dedupes; this escape hatch is for single-pass consumers
-        # (exports, key-set counts).
-        return StageA(triples=u, drug_reactions=drug_reactions)
-    triples = u.groupBy("model_id", "subj", "pred", "obj").agg(
+    triples = _union(frames).groupBy("model_id", "subj", "pred", "obj").agg(
         F.min("evidence").alias("evidence"), F.min("rule").alias("rule")
     )
     return StageA(triples=triples, drug_reactions=drug_reactions)

@@ -534,25 +534,17 @@ def fused_pipeline_udf(bc):
                     pdf["doc_id"], pdf["kinds"], pdf["texts"]
                 ):
                     raw, drugs = extract_doc(doc_id, kinds, texts, D_)
-                    # stage-A dedup: min rule per key (stage_a groupBy)
-                    best: dict[tuple, str] = {}
-                    for s, p, o, rule in raw:
-                        k = (s, p, o)
-                        if k not in best or rule < best[k]:
-                            best[k] = rule
-                    if best:
-                        # pure-python per doc; pandas only per Arrow batch
-                        rows.extend(
-                            apply_rules_rows(
-                                doc_id,
-                                (
-                                    (s, p, o, V.ECO_IMPORTED, r)
-                                    for (s, p, o), r in best.items()
-                                ),
-                                drugs,
-                                B_,
-                            )
+                    # pure-python per doc; pandas only per Arrow batch.
+                    # The stage-A dedup (min rule per key, stage_a's
+                    # groupBy) is apply_rules_rows' _Graph build.
+                    rows.extend(
+                        apply_rules_rows(
+                            doc_id,
+                            ((s, p, o, V.ECO_IMPORTED, r) for s, p, o, r in raw),
+                            drugs,
+                            B_,
                         )
+                    )
                 out = pd.DataFrame(rows, columns=cols)
                 gc.collect()
             finally:

@@ -351,19 +351,13 @@ def b2_delta(t: DataFrame, ck=_ident) -> dict:
 #  query2update_regulation_1.rq: direct exactMatch OR complex has_part)
 # ----------------------------------------------------------------------
 
-def b3_delta(t: DataFrame, ck=_ident, probe: bool = True) -> dict:
+def b3_delta(t: DataFrame, ck=_ident) -> dict:
+    """No emptiness guard here: the pipeline's pred census decides
+    whether B3 runs at all (an empty regulator set just matches nothing)."""
     reg = t.filter(F.col("pred").isin(V.INV_POS_REG, V.INV_NEG_REG)).select(
         "model_id", F.col("subj").alias("z"), F.col("pred").alias("prop"),
         F.col("obj").alias("r2"),
     )
-    # rule guard: no entity-regulation edges -> no matches. One narrow
-    # scan of the (checkpointed) input saves the rule's ~6 join stages on
-    # models without regulators (the reference's SPARQL match would also
-    # return empty, but only after running the full query). Callers that
-    # already know the answer (the pipeline's one-shot pred census) pass
-    # probe=False to skip this blocking scan of the virtual plan.
-    if probe and reg.isEmpty():
-        return {"adds": [], "deletes": []}
     causal = _same_pathway_causal(t)
     exact = _p(t, V.EXACT, "node", "ref")
     out = _p(t, V.HAS_OUTPUT, "r1", "o").join(

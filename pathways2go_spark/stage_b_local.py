@@ -76,21 +76,15 @@ def build_local_dims(ancestors_pdf: pd.DataFrame, complex_parts_pdf: pd.DataFram
     )
 
 
-def _multimap(rows, k, v) -> dict:
-    out: dict = {}
-    for a, b in zip(rows[k], rows[v]):
-        out.setdefault(a, set()).add(b)
-    return out
-
-
 class _Graph:
     """One model's triple set as key-indexed python structures (groups are
     bounded: per-pathway graphs, reference converts them in a 24G heap
     one at a time — ours are orders of magnitude below `local_threshold`)."""
 
     def __init__(self, rows) -> None:
-        # rows: iterable of (subj, pred, obj, evidence, rule)
-        # (subj, pred, obj) -> (evidence, rule)
+        # rows: iterable of (subj, pred, obj, evidence, rule), keys may
+        # repeat; (subj, pred, obj) -> min (evidence, rule) — the fused
+        # path's only stage-A dedup
         self.t: dict[tuple, tuple] = {}
         for s, p, o, e, r in rows:
             k = (s, p, o)

@@ -99,18 +99,19 @@ def test_permissive_quarantines_corrupt_files(spark, tmp_path):
 
 def test_repeated_component_coefficients_roundtrip():
     """A complex repeating one component id with different coefficients
-    keeps per-occurrence Stoichiometry through the round-trip."""
+    keeps per-occurrence Stoichiometry through the round-trip, also when
+    bare and coefficient forms mix ('A,A:2' stays in that order)."""
     spans = [
         {"kind": "protein", "text": "id=A;displayName=a;uniprot=U-1",
          "media_ref": "", "offset": 0},
     ]
     off = len(spans[0]["text"]) + 1
-    spans.append({"kind": "complex",
-                  "text": "id=C;displayName=c;components=A:2,A:3,A",
-                  "media_ref": "", "offset": off})
-    xml = BX.spans_to_rdfxml("stoich", spans)
-    _, rt = BX.rdfxml_to_spans(xml)
-    assert rt == spans
+    for comps in ("A:2,A:3,A", "A,A:2", "A,A:2,A,A:3"):
+        cx = {"kind": "complex", "text": f"id=C;displayName=c;components={comps}",
+              "media_ref": "", "offset": off}
+        xml = BX.spans_to_rdfxml("stoich", spans + [cx])
+        _, rt = BX.rdfxml_to_spans(xml)
+        assert rt == spans + [cx]
 
 
 def test_absolute_iri_about_resolves():

@@ -149,3 +149,24 @@ def test_auto_routing_splits_big_models(spark, documents, result, expected):
     assert_routing_cases(spark, documents, result, [(3, 5)])
     pr = precision_recall(result.triples, expected)
     assert pr["precision"] == 1.0 and pr["recall"] == 1.0, pr
+
+
+def test_local_rules_keep_min_rule_per_key():
+    """apply_rules_rows is the fused path's stage-A dedup: rows repeating
+    a (s, p, o) key under different rule tags come out as one row per
+    key carrying the minimum rule (string order, as stage_a's groupBy)."""
+    from pathways2go_spark.stage_b_local import LocalDims, apply_rules_rows
+
+    dims = LocalDims(frozenset(), frozenset(), frozenset(), {})
+    rx, node = ("r1", V.TYPE, V.MOLECULAR_EVENT), ("r1", V.HAS_INPUT, "m~r1")
+    ty = ("m~r1", V.TYPE, "CHEBI_1")
+    tagged = [(rx, "A9"), (node, "A18"), (ty, "A18"), (rx, "A4"),
+              (node, "A16"), (ty, "A15"), (node, "A17"), (ty, "A9")]
+    out = apply_rules_rows(
+        "m", ((*k, V.ECO_IMPORTED, r) for k, r in tagged), set(), dims
+    )
+    assert sorted(out) == sorted([
+        ("m", *rx, V.ECO_IMPORTED, "A4"),
+        ("m", *node, V.ECO_IMPORTED, "A16"),
+        ("m", *ty, V.ECO_IMPORTED, "A15"),
+    ])
