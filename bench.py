@@ -19,8 +19,8 @@ reported alongside so BENCH_rN files are comparable across rounds, and
 The KG pipeline benchmark runs over a deterministically generated
 interleaved-document corpus (replicas scaled by SPARK_GRAFT_KG_REPLICAS,
 default 20000 -> 300,000 pathway documents); corpus generation time is NOT
-counted. Set SPARK_GRAFT_BENCH_MASTER to override the master (used by
-tools/scaling_bench.py for the N-vs-4N-cores scaling-efficiency run).
+counted. Set SPARK_GRAFT_BENCH_MASTER to override the master (e.g. to pin
+the core count for an N-vs-4N-cores scaling run).
 """
 
 from __future__ import annotations
@@ -48,7 +48,7 @@ def steal_gate(max_steal: float, max_wait_s: float) -> tuple[float, float]:
     measured run starts — WINDOW selection only, never result selection:
     the run proceeds after max_wait_s regardless, every round is
     reported, and the gate reading lands in the output JSON. Same
-    methodology as tools/scaling_bench.py (BENCH/BASELINE.md): this
+    methodology as the historical scaling runs (BENCH/BASELINE.md): this
     shared host intermittently steals >5% of CPU, noise no engine change
     addresses. Disable with SPARK_GRAFT_BENCH_GATE_STEAL=100."""
     waited = 0.0
@@ -90,14 +90,14 @@ def main() -> None:
 
     # split-friendly scans: the KG corpus is byte-small but compute-heavy,
     # so default 128 MB splits would serialize the document scan into one
-    # task (see tools/scaling_driver.py)
+    # task
     spark = get_spark(
         master=master,
         app_name="p2g_bench",
         extra={
             "spark.sql.files.maxPartitionBytes": str(2 * 1024 * 1024),
             "spark.sql.files.openCostInBytes": str(128 * 1024),
-            # ~8 scan-task waves per core (see tools/scaling_driver.py)
+            # ~8 scan-task waves per core
             "spark.sql.files.minPartitionNum": str(8 * cpus),
         },
     )

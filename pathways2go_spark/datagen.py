@@ -997,8 +997,8 @@ def ensure_fixture(out_dir: str, replicas: int = 1) -> dict[str, str]:
     paths = write_fixture(build_fixture(replicas), out_dir)
     # derived artifacts must not outlive the fixture they derive from:
     # anything in out_dir that write_fixture didn't just produce is a
-    # tool-written derivative (reference_gpad from tests, mega_doc from
-    # skew_bench, sink/stream scratch dirs) and can be stale
+    # tool-written derivative (reference_gpad from tests, sink/stream
+    # scratch dirs) and can be stale
     # against the regenerated DOCUMENTS_SCHEMA or corpus — drop them all.
     import shutil
 

@@ -62,7 +62,7 @@ def _stage_b_distributed(
     t: DataFrame, drugs: DataFrame, dims: Dims
 ) -> tuple[DataFrame, DataFrame]:
     # AQE stays ON for the chain: measured on the 150k-reaction mega doc
-    # (tools/skew_bench.py corpus) the chain runs 37.5s with AQE vs
+    # (BENCH/BASELINE.md hub-skew corpus) the chain runs 37.5s with AQE vs
     # 64-72s without — partition coalescing collapses the near-empty
     # post-shuffle partitions of the merge/B9 full-table shuffles, and
     # skew-join splitting stays available as the residual-skew defense.

@@ -5,11 +5,20 @@ go-cam-shapes schema (`/root/reference/Makefile` `validate:` target:
 `minerva-cli --validate-go-cams --shex --shexpath
 go-cam-shapes-edited.shex`) and renders the violations with
 `scripts/readable_shex_report.py`. Here the same shape constraints are
-re-expressed as declarative DataFrame checks over the flat triple
-table — each check is one scan of the (broadcast-filtered) triples
-plus broadcast ontology-closure semi-joins, so the whole suite is
-map-side at any corpus scale (the ontology closure is the only join
-state, bounded by ontology size, never by corpus size).
+re-expressed as predicates over one node-flag frame:
+
+  class flags  one row per ontology class under a checked root (mf,
+               bp, cc, chem booleans), one groupBy of the ontology
+               closure — bounded by ontology size, broadcast;
+  node flags   one row per typed (model_id, node): occurrent,
+               BP-typed, chemical-typed, and the list of its non-CC
+               types — one groupBy over the type triples;
+  edges        one distinct scan of the checked predicates, joined to
+               the node flags on subject and on object. The seven
+               per-edge checks are boolean predicates over that row,
+               exploded into violations; the two max-1 checks are one
+               groupBy. A class absent from the ontology carries no
+               flag, so it is neither occurrent nor CC.
 
 Shapes checked (the go-cam-shapes invariants the emitted models rely
 on; names follow the readable report's categories):
@@ -68,243 +77,119 @@ CHECKS = [
 
 _COLS = ["check", "model_id", "node", "pred", "obj", "detail"]
 
+_ROOTS = {"mf": V.MF_ROOT, "bp": V.BP_ROOT, "cc": V.CC_ROOT,
+          "chem": V.CHEMICAL_ROOT}
+_SM_PREDS = [V.SM_ACTIVATOR, V.SM_INHIBITOR]
+_MAX1_PREDS = [V.ENABLED_BY, V.OCCURS_IN]
+_CHECKED_PREDS = [V.PART_OF, V.INTERACTS_WITH, *_MAX1_PREDS, *_SM_PREDS,
+                  *CAUSAL_PREDS, *IO_PREDS]
+_NOT_PHYSICAL = "target is MF/BP-typed (occurrent), expected physical entity"
 
-def _types(t: DataFrame) -> DataFrame:
-    return t.filter(F.col("pred") == V.TYPE).select(
+
+def class_flags(ancestors: DataFrame) -> DataFrame:
+    """(cls, mf, bp, cc, chem): one row per class under any of the four
+    roots, one boolean per root (broadcast-sized)."""
+    return (
+        ancestors.filter(F.col("ancestor_iri").isin(list(_ROOTS.values())))
+        .groupBy(F.col("class_iri").alias("cls"))
+        .agg(*[F.max(F.col("ancestor_iri") == r).alias(k)
+               for k, r in _ROOTS.items()])
+    )
+
+
+def _flag(name: str):
+    """A flag column read as False where its left join found no row."""
+    return F.coalesce(F.col(name), F.lit(False))
+
+
+def _node_flags(t: DataFrame, ancestors: DataFrame) -> DataFrame:
+    """(model_id, node, occ, bp, chem, non_cc) per typed node. `non_cc`
+    keeps one entry per type row, duplicates included."""
+    types = t.filter(F.col("pred") == V.TYPE).select(
         "model_id", F.col("subj").alias("node"), F.col("obj").alias("cls")
+    ).join(F.broadcast(class_flags(ancestors)), "cls", "left")
+    return types.groupBy("model_id", "node").agg(
+        F.max(_flag("mf") | _flag("bp") | (F.col("cls") == V.MOLECULAR_EVENT))
+        .alias("occ"),
+        F.max(_flag("bp")).alias("bp"),
+        F.max(_flag("chem")).alias("chem"),
+        F.collect_list(F.when(~_flag("cc"), F.col("cls"))).alias("non_cc"),
     )
 
 
-def _closure(ancestors: DataFrame, roots: list[str]) -> DataFrame:
-    """Distinct classes under any of `roots` (broadcast-sized)."""
-    return (
-        ancestors.filter(F.col("ancestor_iri").isin(roots))
-        .select(F.col("class_iri").alias("cls"))
-        .distinct()
-    )
-
-
-def _occurrent_nodes(
-    t: DataFrame, ancestors: DataFrame, _shared: DataFrame | None = None
-) -> DataFrame:
-    """(model_id, node) with >=1 MF/BP/molecular-event type. `_shared`:
-    a precomputed copy (shex_validate materializes this frame ONCE and
-    threads it through the five checks that need it — otherwise every
-    check re-expands the closure-join subtree into the final plan and
-    re-scans the fact table)."""
-    if _shared is not None:
-        return _shared
-    occ_cls = _closure(ancestors, [V.MF_ROOT, V.BP_ROOT])
-    ty = _types(t)
-    return (
-        ty.join(F.broadcast(occ_cls), "cls", "left_semi")
-        .unionByName(ty.filter(F.col("cls") == V.MOLECULAR_EVENT).drop("cls"),
-                     allowMissingColumns=True)
-        .select("model_id", "node")
-        .distinct()
-    )
-
-
-def _edges_of(t: DataFrame, preds: list[str]) -> DataFrame:
-    return t.filter(F.col("pred").isin(preds)).select(
-        "model_id", F.col("subj").alias("node"), "pred", "obj"
-    ).distinct()
-
-
-def _v(df: DataFrame, check: str, detail) -> DataFrame:
-    return df.select(
-        F.lit(check).alias("check"), "model_id", "node", "pred", "obj",
-        detail.alias("detail"),
-    )
-
-
-def enabled_by_max1(t: DataFrame) -> DataFrame:
-    """MolecularFunction shape: enabled_by {0,1} — more than one
-    distinct enabler on one activity violates (go-cam-shapes)."""
-    multi = (
-        _edges_of(t, [V.ENABLED_BY])
-        .groupBy("model_id", "node")
-        .agg(
-            F.count("*").alias("n"),
-            F.array_sort(F.collect_set("obj")).alias("enablers"),
-        )
-        .filter(F.col("n") > 1)
-    )
-    return _v(
-        multi.withColumn("pred", F.lit(V.ENABLED_BY)).withColumn(
-            "obj", F.element_at("enablers", 1)
-        ),
-        "enabled_by_max1",
-        F.concat(F.lit("enablers: "), F.concat_ws(",", "enablers")),
-    )
-
-
-def _target_is_occurrent(
-    t: DataFrame, ancestors: DataFrame, preds: list[str], check: str,
-    occ: DataFrame | None = None,
-) -> DataFrame:
-    """Edges whose OBJECT is an occurrent — the physical-continuant
-    shapes (enabled_by / io / interacts) expressed negatively so
-    foreign classes absent from the ontology never false-positive."""
-    occ = _occurrent_nodes(t, ancestors, occ).withColumnRenamed("node", "obj")
-    e = _edges_of(t, preds)
-    return _v(
-        e.join(occ, ["model_id", "obj"], "left_semi"),
-        check,
-        F.lit("target is MF/BP-typed (occurrent), expected physical entity"),
-    )
-
-
-def enabled_by_physical(
-    t: DataFrame, ancestors: DataFrame, occ: DataFrame | None = None
-) -> DataFrame:
-    return _target_is_occurrent(
-        t, ancestors, [V.ENABLED_BY], "enabled_by_physical", occ
-    )
-
-
-def io_physical(
-    t: DataFrame, ancestors: DataFrame, occ: DataFrame | None = None
-) -> DataFrame:
-    return _target_is_occurrent(t, ancestors, IO_PREDS, "io_physical", occ)
-
-
-def interacts_physical(
-    t: DataFrame, ancestors: DataFrame, occ: DataFrame | None = None
-) -> DataFrame:
-    occ = _occurrent_nodes(t, ancestors, occ)
-    e = _edges_of(t, [V.INTERACTS_WITH])
-    both_ends = e.join(occ, ["model_id", "node"], "left_semi").unionByName(
-        e.join(occ.withColumnRenamed("node", "obj"), ["model_id", "obj"],
-               "left_semi")
-    ).distinct()
-    return _v(
-        both_ends,
-        "interacts_physical",
-        F.lit("interacts_with endpoint is an occurrent"),
-    )
-
-
-def occurs_in_cc(t: DataFrame, ancestors: DataFrame) -> DataFrame:
-    """occurs_in target must be typed ONLY with cellular-component
-    classes (AnatomicalEntity shape)."""
-    cc = _closure(ancestors, [V.CC_ROOT])
-    occ_edges = _edges_of(t, [V.OCCURS_IN])
-    loc_nodes = occ_edges.select(
-        "model_id", F.col("obj").alias("node")
-    ).distinct()
-    bad_typed = (
-        _types(t)
-        .join(loc_nodes, ["model_id", "node"], "left_semi")
-        .join(F.broadcast(cc), "cls", "left_anti")
-    )
-    untyped = loc_nodes.join(
-        _types(t).select("model_id", "node").distinct(),
-        ["model_id", "node"], "left_anti",
-    ).withColumn("cls", F.lit(None).cast("string"))
-    bad = bad_typed.unionByName(untyped).withColumnRenamed("node", "obj")
-    return _v(
-        occ_edges.join(bad, ["model_id", "obj"], "inner")
-        .withColumnRenamed("cls", "bad_cls"),
-        "occurs_in_cc",
-        F.concat(F.lit("location type not under CC root: "),
-                 F.coalesce("bad_cls", F.lit("<untyped>"))),
-    )
-
-
-def occurs_in_max1(t: DataFrame) -> DataFrame:
-    multi = (
-        _edges_of(t, [V.OCCURS_IN])
-        .groupBy("model_id", "node")
-        .agg(
-            F.count("*").alias("n"),
-            F.array_sort(F.collect_set("obj")).alias("locs"),
-        )
-        .filter(F.col("n") > 1)
-    )
-    return _v(
-        multi.withColumn("pred", F.lit(V.OCCURS_IN)).withColumn(
-            "obj", F.element_at("locs", 1)
-        ),
-        "occurs_in_max1",
-        F.concat(F.lit("locations: "), F.concat_ws(",", "locs")),
-    )
-
-
-def part_of_bp(t: DataFrame, ancestors: DataFrame) -> DataFrame:
-    """part_of must land on a BP-typed node (the pathway / dedicated
-    BP-individual shape)."""
-    bp = _closure(ancestors, [V.BP_ROOT])
-    bp_nodes = (
-        _types(t).join(F.broadcast(bp), "cls", "left_semi")
-        .select("model_id", F.col("node").alias("obj"))
-        .distinct()
-    )
-    e = _edges_of(t, [V.PART_OF])
-    return _v(
-        e.join(bp_nodes, ["model_id", "obj"], "left_anti"),
-        "part_of_bp",
-        F.lit("part_of target carries no biological_process type"),
-    )
-
-
-def causal_occurrents(
-    t: DataFrame, ancestors: DataFrame, occ: DataFrame | None = None
-) -> DataFrame:
-    """Causal-family edges connect occurrents on BOTH ends."""
-    occ = _occurrent_nodes(t, ancestors, occ)
-    e = _edges_of(t, CAUSAL_PREDS)
-    bad_subj = e.join(occ, ["model_id", "node"], "left_anti").withColumn(
-        "end", F.lit("subject")
-    )
-    bad_obj = e.join(
-        occ.withColumnRenamed("node", "obj"), ["model_id", "obj"], "left_anti"
-    ).withColumn("end", F.lit("object"))
-    return _v(
-        bad_subj.unionByName(bad_obj).distinct(),
-        "causal_occurrents",
-        F.concat(F.col("end"), F.lit(" is not an occurrent")),
-    )
-
-
-def sm_regulator_chemical(t: DataFrame, ancestors: DataFrame) -> DataFrame:
-    """has_small_molecule_{activator,inhibitor} targets must carry a
-    chemical-entity type (the B6 rule's shape)."""
-    chem = _closure(ancestors, [V.CHEMICAL_ROOT])
-    chem_nodes = (
-        _types(t).join(F.broadcast(chem), "cls", "left_semi")
-        .select("model_id", F.col("node").alias("obj"))
-        .distinct()
-    )
-    e = _edges_of(t, [V.SM_ACTIVATOR, V.SM_INHIBITOR])
-    return _v(
-        e.join(chem_nodes, ["model_id", "obj"], "left_anti"),
-        "sm_regulator_chemical",
-        F.lit("regulator carries no chemical-entity type"),
-    )
+def _hit(check: str, detail):
+    return F.struct(F.lit(check).alias("check"), detail.alias("detail"))
 
 
 def shex_validate(t: DataFrame, ancestors: DataFrame) -> DataFrame:
     """All shape checks unioned: (check, model_id, node, pred, obj,
     detail); empty = every model conforms."""
-    # the occurrent-node frame feeds five checks; materialize it ONCE
-    # (type-row bounded) so the suite costs one closure join, not five
-    occ = _occurrent_nodes(t, ancestors).localCheckpoint(eager=True)
-    frames = [
-        enabled_by_max1(t),
-        enabled_by_physical(t, ancestors, occ),
-        occurs_in_cc(t, ancestors),
-        occurs_in_max1(t),
-        part_of_bp(t, ancestors),
-        causal_occurrents(t, ancestors, occ),
-        io_physical(t, ancestors, occ),
-        sm_regulator_chemical(t, ancestors),
-        interacts_physical(t, ancestors, occ),
+    edges = t.filter(F.col("pred").isin(_CHECKED_PREDS)).select(
+        "model_id", F.col("subj").alias("node"), "pred", "obj"
+    ).distinct()
+    nf = _node_flags(t, ancestors)
+    subj = nf.select("model_id", "node", F.col("occ").alias("s_occ"))
+    obj = nf.select("model_id", F.col("node").alias("obj"),
+                    *[F.col(c).alias(f"o_{c}")
+                      for c in ("occ", "bp", "chem", "non_cc")])
+    e = edges.join(subj, ["model_id", "node"], "left").join(
+        obj, ["model_id", "obj"], "left"
+    )
+
+    pred = F.col("pred")
+    s_occ, o_occ, o_bp, o_chem = map(
+        _flag, ("s_occ", "o_occ", "o_bp", "o_chem")
+    )
+    per_edge = [
+        F.when(cond, _hit(check, F.lit(detail)))
+        for check, cond, detail in [
+            ("enabled_by_physical", (pred == V.ENABLED_BY) & o_occ,
+             _NOT_PHYSICAL),
+            ("part_of_bp", (pred == V.PART_OF) & ~o_bp,
+             "part_of target carries no biological_process type"),
+            ("causal_occurrents", pred.isin(CAUSAL_PREDS) & ~s_occ,
+             "subject is not an occurrent"),
+            ("causal_occurrents", pred.isin(CAUSAL_PREDS) & ~o_occ,
+             "object is not an occurrent"),
+            ("io_physical", pred.isin(IO_PREDS) & o_occ, _NOT_PHYSICAL),
+            ("sm_regulator_chemical", pred.isin(_SM_PREDS) & ~o_chem,
+             "regulator carries no chemical-entity type"),
+            ("interacts_physical", (pred == V.INTERACTS_WITH) & (s_occ | o_occ),
+             "interacts_with endpoint is an occurrent"),
+        ]
     ]
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out.select(*_COLS)
+    # an occurs_in edge fires once per non-CC type row of its location
+    per_loc = F.transform(
+        F.coalesce(F.col("o_non_cc"), F.array(F.lit("<untyped>"))),
+        lambda c: _hit("occurs_in_cc", F.concat(
+            F.lit("location type not under CC root: "), c
+        )),
+    )
+    hits = e.select(
+        "model_id", "node", "pred", "obj",
+        F.inline(F.filter(
+            F.when(pred == V.OCCURS_IN, per_loc).otherwise(F.array(*per_edge)),
+            lambda h: h.isNotNull(),
+        )),
+    )
+
+    enabled_by = pred == V.ENABLED_BY
+    max1 = (
+        edges.filter(pred.isin(_MAX1_PREDS))
+        .groupBy("model_id", "node", "pred")
+        .agg(F.array_sort(F.collect_set("obj")).alias("objs"))
+        .filter(F.size("objs") > 1)
+        .select(
+            F.when(enabled_by, "enabled_by_max1").otherwise("occurs_in_max1")
+            .alias("check"),
+            "model_id", "node", "pred", F.element_at("objs", 1).alias("obj"),
+            F.concat(
+                F.when(enabled_by, "enablers: ").otherwise("locations: "),
+                F.concat_ws(",", "objs"),
+            ).alias("detail"),
+        )
+    )
+    return hits.select(*_COLS).unionByName(max1)
 
 
 def shex_summary(t: DataFrame, ancestors: DataFrame) -> DataFrame:

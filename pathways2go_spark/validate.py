@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import vocab as V
+from .shex import class_flags
 
 _KNOWN_PREDS = set(V.EDGE_PREDS) | {V.TYPE, V.EXACT, V.LABEL}
 
@@ -98,28 +99,19 @@ def mf_bp_overlap(t: DataFrame, ancestors: DataFrame) -> DataFrame:
     """Nodes typed in both the MF and BP closures — the disjointness the
     reference's reasoner consistency check would surface. Detail names
     the clashing class pair and the rules that asserted each type."""
-    t = _with_rule(t)
-    ty = t.filter(F.col("pred") == V.TYPE).select(
-        "model_id", F.col("subj").alias("node"),
-        F.col("obj").alias("cls"), "rule",
-    )
-
-    def closure(root: str, side: str) -> DataFrame:
-        cl = ancestors.filter(F.col("ancestor_iri") == root).select(
-            F.col("class_iri").alias("cls")
-        )
-        return (
-            ty.join(F.broadcast(cl), "cls", "left_semi")
-            .groupBy("model_id", "node")
-            .agg(F.min(F.concat(
-                F.col("cls"), F.lit(" (by rule "), F.col("rule"), F.lit(")")
-            )).alias(side))
-        )
+    def evidence(flag: str):
+        return F.min(F.when(F.col(flag), F.concat(
+            F.col("cls"), F.lit(" (by rule "), F.col("rule"), F.lit(")")
+        )))
 
     return (
-        closure(V.MF_ROOT, "mf_ev").join(
-            closure(V.BP_ROOT, "bp_ev"), ["model_id", "node"]
-        )
+        _with_rule(t).filter(F.col("pred") == V.TYPE)
+        .select("model_id", F.col("subj").alias("node"),
+                F.col("obj").alias("cls"), "rule")
+        .join(F.broadcast(class_flags(ancestors)), "cls")
+        .groupBy("model_id", "node")
+        .agg(evidence("mf").alias("mf_ev"), evidence("bp").alias("bp_ev"))
+        .filter(F.col("mf_ev").isNotNull() & F.col("bp_ev").isNotNull())
         .withColumn("pred", F.lit(V.TYPE))
         .withColumn("detail", F.concat(
             F.lit("typed in disjoint closures: MF via "), F.col("mf_ev"),

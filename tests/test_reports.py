@@ -10,15 +10,13 @@ from pyspark.sql import functions as F
 from pathways2go_spark import vocab as V
 from pathways2go_spark.analytics import gpad_export
 from pathways2go_spark.dims import load_dims
-from pathways2go_spark.pipeline import run_pipeline
 from pathways2go_spark.validate import validate
 
 
 @pytest.fixture(scope="module")
-def result(spark, documents, fixture_paths):
+def result(spark, default_run, fixture_paths):
     dims = load_dims(spark, os.path.dirname(fixture_paths["documents"]))
-    res = run_pipeline(spark, documents, dims)
-    return res, dims
+    return default_run, dims
 
 
 def test_gpad_enables_row(result):

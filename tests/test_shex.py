@@ -5,13 +5,14 @@ control the reference gets from Minerva's violation reports
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
 from pathways2go_spark import shex
 from pathways2go_spark import vocab as V
 from pathways2go_spark.dims import load_dims
-from pathways2go_spark.pipeline import run_pipeline
 from tests.conftest import FIXTURE_DIR
 
 
@@ -21,11 +22,8 @@ def dims(spark):
 
 
 @pytest.fixture(scope="module")
-def triples(spark, documents, dims):
-    res = run_pipeline(spark, documents, dims)
-    t = res.triples.select("model_id", "subj", "pred", "obj")
-    t.cache().count()
-    return t
+def triples(default_run):
+    return default_run.triples.select("model_id", "subj", "pred", "obj")
 
 
 def test_golden_corpus_conforms(triples, dims):
@@ -137,3 +135,82 @@ def test_seeded_io_occurrent_and_sm_regulator(spark, triples, dims):
     fired = _checks_fired(spark, triples, dims, extra)
     assert {"io_physical", "sm_regulator_chemical",
             "interacts_physical"} <= fired
+
+
+def test_seeded_violation_rows_exact(spark, triples, dims):
+    """One seeded model fires all nine checks; the exact multiset of
+    violation rows pins multiplicity and detail text, not just which
+    checks fired. Seeds include a location typed twice with the same
+    non-CC class (two rows), a type outside the ontology, an untyped
+    location, a causal edge bad at both ends, an interacts_with edge
+    with both ends occurrent (one row) and duplicated edges (one row)."""
+    m = "seedm"
+    ty = [
+        ("rxn1", V.MOLECULAR_EVENT), ("rxn2", V.MF_ROOT), ("bp1", V.BP_ROOT),
+        ("prot1", "UniProtKB_U-seed"), ("chem1", "CHEBI_15377"),
+        ("loc_mf", V.MF_ROOT), ("loc_mf", V.MF_ROOT),
+        ("loc_foreign", "FOREIGN_seed"), ("loc_cc", V.CC_ROOT),
+        ("loc_mixed", V.CC_ROOT), ("loc_mixed", "CHEBI_15377"),
+    ]
+    edges = [
+        ("rxn1", V.ENABLED_BY, "prot1"), ("rxn1", V.ENABLED_BY, "prot1"),
+        ("rxn1", V.ENABLED_BY, "chem1"),
+        ("rxn2", V.ENABLED_BY, "rxn1"),
+        ("rxn1", V.OCCURS_IN, "loc_mf"), ("rxn1", V.OCCURS_IN, "loc_foreign"),
+        ("rxn2", V.OCCURS_IN, "loc_untyped"), ("bp1", V.OCCURS_IN, "loc_cc"),
+        ("chem1", V.OCCURS_IN, "loc_mixed"),
+        ("rxn1", V.PART_OF, "prot1"), ("rxn1", V.PART_OF, "prot1"),
+        ("rxn2", V.PART_OF, "bp1"),
+        ("prot1", V.CAUSALLY_UPSTREAM, "chem1"),
+        ("prot1", V.CAUSALLY_UPSTREAM, "chem1"),
+        ("rxn1", V.CAUSALLY_UPSTREAM, "rxn2"),
+        ("rxn1", V.HAS_OUTPUT, "bp1"), ("rxn1", V.HAS_INPUT, "chem1"),
+        ("rxn2", V.SM_ACTIVATOR, "prot1"), ("rxn2", V.SM_INHIBITOR, "chem1"),
+        ("rxn1", V.INTERACTS_WITH, "rxn2"), ("prot1", V.INTERACTS_WITH, "rxn1"),
+        ("prot1", V.INTERACTS_WITH, "chem1"),
+    ]
+    extra = [(m, n, V.TYPE, c) for n, c in ty] + [(m, *e) for e in edges]
+    v = shex.shex_validate(_with(spark, triples, extra), dims.onto_ancestors)
+    occurrent = "target is MF/BP-typed (occurrent), expected physical entity"
+    not_cc = "location type not under CC root: "
+    endpoint = "interacts_with endpoint is an occurrent"
+    want = Counter([
+        ("enabled_by_max1", m, "rxn1", V.ENABLED_BY, "chem1",
+         "enablers: chem1,prot1"),
+        ("enabled_by_physical", m, "rxn2", V.ENABLED_BY, "rxn1", occurrent),
+        ("occurs_in_cc", m, "rxn1", V.OCCURS_IN, "loc_mf", not_cc + V.MF_ROOT),
+        ("occurs_in_cc", m, "rxn1", V.OCCURS_IN, "loc_mf", not_cc + V.MF_ROOT),
+        ("occurs_in_cc", m, "rxn1", V.OCCURS_IN, "loc_foreign",
+         not_cc + "FOREIGN_seed"),
+        ("occurs_in_cc", m, "rxn2", V.OCCURS_IN, "loc_untyped",
+         not_cc + "<untyped>"),
+        ("occurs_in_cc", m, "chem1", V.OCCURS_IN, "loc_mixed",
+         not_cc + "CHEBI_15377"),
+        ("occurs_in_max1", m, "rxn1", V.OCCURS_IN, "loc_foreign",
+         "locations: loc_foreign,loc_mf"),
+        ("part_of_bp", m, "rxn1", V.PART_OF, "prot1",
+         "part_of target carries no biological_process type"),
+        ("causal_occurrents", m, "prot1", V.CAUSALLY_UPSTREAM, "chem1",
+         "subject is not an occurrent"),
+        ("causal_occurrents", m, "prot1", V.CAUSALLY_UPSTREAM, "chem1",
+         "object is not an occurrent"),
+        ("io_physical", m, "rxn1", V.HAS_OUTPUT, "bp1", occurrent),
+        ("sm_regulator_chemical", m, "rxn2", V.SM_ACTIVATOR, "prot1",
+         "regulator carries no chemical-entity type"),
+        ("interacts_physical", m, "rxn1", V.INTERACTS_WITH, "rxn2", endpoint),
+        ("interacts_physical", m, "prot1", V.INTERACTS_WITH, "rxn1", endpoint),
+    ])
+    assert {c for c, *_ in want} == set(shex.CHECKS)
+    assert Counter(tuple(r) for r in v.collect()) == want
+
+
+def test_shape_checks_plan_is_flat(spark, fixture_paths, dims):
+    """The nine checks share one node-flag frame: the physical plan stays
+    within 15 exchanges, with no cartesian product, no nested-loop join
+    and no row-at-a-time Python UDF. Reads the plan only; runs no job."""
+    t = spark.read.parquet(fixture_paths["expected_triples"])
+    v = shex.shex_validate(t, dims.onto_ancestors)
+    plan = v._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") <= 15, plan
+    for bad in ("CartesianProduct", "BroadcastNestedLoopJoin", "BatchEvalPython"):
+        assert bad not in plan, plan
