@@ -8,16 +8,14 @@ partitioned triples table.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import vocab as V
-
-
-def _types(t: DataFrame) -> DataFrame:
-    return t.filter(F.col("pred") == V.TYPE).select(
-        "model_id", F.col("subj").alias("node"), F.col("obj").alias("cls")
-    )
+from .dims import ROOTS, type_rows, typed
 
 
 def nodes_by_root(t: DataFrame, ancestors: DataFrame, root: str) -> DataFrame:
@@ -27,7 +25,7 @@ def nodes_by_root(t: DataFrame, ancestors: DataFrame, root: str) -> DataFrame:
         F.col("class_iri").alias("cls")
     )
     return (
-        _types(t).join(F.broadcast(closure), "cls")
+        type_rows(t).join(F.broadcast(closure), "cls")
         .select("model_id", "node", "cls")
         .distinct()
     )
@@ -49,7 +47,7 @@ def component_locations(t: DataFrame) -> DataFrame:
         "model_id", F.col("obj").alias("node")
     )
     return (
-        occ.join(_types(t), ["model_id", "node"])
+        occ.join(type_rows(t), ["model_id", "node"])
         .select("model_id", F.col("cls").alias("location_cls"))
         .distinct()
     )
@@ -66,15 +64,10 @@ def xref_map(t: DataFrame) -> DataFrame:
 
 def count_unclassified(t: DataFrame, ancestors: DataFrame) -> DataFrame:
     """G6: per model, nodes with no GO/CHEBI-rooted type (GoCAM.java:390-435)."""
-    rooted = ancestors.filter(
-        F.col("ancestor_iri").isin(V.MF_ROOT, V.BP_ROOT, V.CC_ROOT,
-                                   V.CHEMICAL_ROOT, V.PROTEIN_ROOT, V.COMPLEX_GO)
-    ).select(F.col("class_iri").alias("cls"))
-    ty = _types(t)
-    classified = ty.join(F.broadcast(rooted), "cls").select("model_id", "node").distinct()
     return (
-        ty.select("model_id", "node").distinct()
-        .join(classified, ["model_id", "node"], "left_anti")
+        typed(t, ancestors).groupBy("model_id", "node")
+        .agg(F.max(reduce(operator.or_, map(F.col, ROOTS))).alias("rooted"))
+        .filter(~F.col("rooted"))
         .groupBy("model_id")
         .agg(F.count("*").alias("n_unclassified"))
     )
@@ -83,7 +76,7 @@ def count_unclassified(t: DataFrame, ancestors: DataFrame) -> DataFrame:
 def untyped_reactions(t: DataFrame) -> DataFrame:
     """G7: molecular_event reactions with their concatenated io
     (query2find_untyped.rq GROUP_CONCAT)."""
-    me = _types(t).filter(F.col("cls") == V.MOLECULAR_EVENT).select(
+    me = type_rows(t).filter(F.col("cls") == V.MOLECULAR_EVENT).select(
         "model_id", F.col("node").alias("reaction")
     )
     io = t.filter(F.col("pred").isin(V.HAS_INPUT, V.HAS_OUTPUT)).select(
@@ -156,26 +149,13 @@ def gpad_export(t: DataFrame, ancestors: DataFrame) -> DataFrame:
     final triple set: gene products get an `enables` row for each GO
     molecular function of a reaction they enable, and an `involved_in`
     row for each GO biological process of the pathway that reaction is
-    part of. Closure membership (MF/BP) comes from the broadcast ancestor
-    dim — the reference's structural-reasoner subclass checks.
+    part of. Closure membership (MF/BP) is the shared class flags
+    (dims.typed) — the reference's structural-reasoner subclass checks.
 
     Output columns mirror the GPAD TSV record (db, db_object_id,
     qualifier, go_id, reference, evidence, assigned_by); the date column
     is a fixed provenance constant (deterministic output for resume)."""
-    types = _types(t)
-    mf_cls = ancestors.filter(F.col("ancestor_iri") == V.MF_ROOT).select(
-        F.col("class_iri").alias("cls")
-    )
-    bp_cls = ancestors.filter(F.col("ancestor_iri") == V.BP_ROOT).select(
-        F.col("class_iri").alias("cls")
-    )
-    rxn_mf = types.join(F.broadcast(mf_cls), "cls", "left_semi").select(
-        "model_id", F.col("node").alias("reaction"), F.col("cls").alias("go_id")
-    )
-    pw_bp = types.join(F.broadcast(bp_cls), "cls", "left_semi").select(
-        "model_id", F.col("node").alias("pathway"), F.col("cls").alias("go_id")
-    )
-    gp = types.filter(F.col("cls").startswith("UniProtKB_")).select(
+    gp = type_rows(t).filter(F.col("cls").startswith("UniProtKB_")).select(
         "model_id",
         "node",
         F.substring(F.col("cls"), len("UniProtKB_") + 1, 10_000).alias("db_object_id"),
@@ -184,21 +164,29 @@ def gpad_export(t: DataFrame, ancestors: DataFrame) -> DataFrame:
         t.filter(F.col("pred") == V.ENABLED_BY)
         .select("model_id", F.col("subj").alias("reaction"), F.col("obj").alias("node"))
         .join(gp, ["model_id", "node"])
-    )
-    enables = enablers.join(rxn_mf, ["model_id", "reaction"]).select(
-        "model_id", "db_object_id", F.lit("enables").alias("qualifier"), "go_id"
+        .select("model_id", "reaction", "db_object_id")
     )
     part_of = t.filter(F.col("pred") == V.PART_OF).select(
-        "model_id", F.col("subj").alias("reaction"), F.col("obj").alias("pathway")
+        "model_id", F.col("subj").alias("reaction"), F.col("obj").alias("node")
     )
-    involved = (
-        enablers.join(part_of, ["model_id", "reaction"])
-        .join(pw_bp, ["model_id", "pathway"])
-        .select("model_id", "db_object_id",
-                F.lit("involved_in").alias("qualifier"), "go_id")
+    # the node each annotation is read off: the enabled reaction itself
+    # (its MF types) and every pathway it is part of (their BP types)
+    targets = enablers.select(
+        "model_id", F.col("reaction").alias("node"), "db_object_id",
+        F.lit("enables").alias("qualifier"),
+    ).unionByName(
+        enablers.join(part_of, ["model_id", "reaction"]).select(
+            "model_id", "node", "db_object_id",
+            F.lit("involved_in").alias("qualifier"),
+        )
     )
+    go = typed(t, ancestors).filter(F.col("mf") | F.col("bp"))
     return (
-        enables.unionByName(involved)
+        targets.join(go, ["model_id", "node"])
+        .filter(F.when(F.col("qualifier") == "enables", F.col("mf"))
+                .otherwise(F.col("bp")))
+        .select("model_id", "db_object_id", "qualifier",
+                F.col("cls").alias("go_id"))
         .distinct()
         .select(
             F.lit("UniProtKB").alias("db"),

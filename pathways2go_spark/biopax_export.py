@@ -55,6 +55,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import vocab as V
+from .dims import type_rows, typed
 
 # causally_upstream_of and its subproperties emitted by the pipeline
 # (the reference selects prop axioms whose super-properties include
@@ -80,18 +81,10 @@ def _st(df: DataFrame, kind: str, bp_id, prop: str, val) -> DataFrame:
 def kg_to_biopax(triples: DataFrame, onto_ancestors: DataFrame) -> DataFrame:
     """Final GO-CAM triples -> BioPAX statement table (see module doc)."""
     t = triples
-    ty = t.filter(F.col("pred") == V.TYPE).select(
-        "model_id", F.col("subj").alias("node"), F.col("obj").alias("cls")
-    )
+    ty = type_rows(t)
     anc = F.broadcast(onto_ancestors.select(
         F.col("class_iri").alias("cls"), F.col("ancestor_iri").alias("anc")
     ))
-
-    def nodes_under(root: str) -> DataFrame:
-        return (
-            ty.join(anc.filter(F.col("anc") == root), "cls")
-            .select("model_id", "node").distinct()
-        )
 
     # Shared frames below feed many statement branches; left virtual,
     # every union branch re-expands their join trees into the final
@@ -104,7 +97,8 @@ def kg_to_biopax(triples: DataFrame, onto_ancestors: DataFrame) -> DataFrame:
         return df.localCheckpoint(eager=True)
 
     # -- pathways (getInstances(bp_class): typed under the BP root) ------
-    bp = ck(nodes_under(V.BP_ROOT).withColumnRenamed("node", "b"))
+    bp = ck(typed(t, onto_ancestors).filter(F.col("bp"))
+            .select("model_id", F.col("node").alias("b")).distinct())
     pathway_src = _st(bp, "Pathway", F.col("b"), "dataSource", F.col("model_id"))
     bp_types = ty.withColumnRenamed("node", "b").join(bp, ["model_id", "b"])
     pathway_xref = _st(bp_types, "Pathway", F.col("b"), "xref", F.col("cls"))

@@ -7,6 +7,13 @@ tbox part->complex index (QRunner.java:950-1027).
 All are bounded (<< memory) so every join site uses F.broadcast() — at
 cluster scale these are the classic broadcast-hash-join dimensions; no
 shuffle ever moves the fact table for a dim lookup.
+
+Root-closure membership has one owner here: `class_flags` answers "is
+this class under the MF / BP / CC / chemical / protein / complex root"
+from one groupBy of `onto_ancestors`; `flagged` and `typed` attach
+those flags to the corpus's rdf:type rows. The shape checks, the
+validation suite, the reports and the analytics all read these flags
+instead of filtering the closure per root.
 """
 
 from __future__ import annotations
@@ -15,6 +22,13 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from . import vocab as V
+
+# flag name -> root class; class_flags has one boolean column per entry
+ROOTS = {"mf": V.MF_ROOT, "bp": V.BP_ROOT, "cc": V.CC_ROOT,
+         "chem": V.CHEMICAL_ROOT, "protein": V.PROTEIN_ROOT,
+         "complex": V.COMPLEX_GO}
 
 
 @dataclass
@@ -39,6 +53,41 @@ def load_dims(spark: SparkSession, fixture_dir: str) -> Dims:
         accession_map=rd("accession_map"),
         drug_ids=rd("drug_ids"),
     )
+
+
+def class_flags(ancestors: DataFrame) -> DataFrame:
+    """(cls, mf, bp, cc, chem, protein, complex): one row per class under
+    any of the ROOTS (the root itself included), one boolean per root.
+    Bounded by the ontology, so every caller broadcasts it."""
+    return (
+        ancestors.filter(F.col("ancestor_iri").isin(list(ROOTS.values())))
+        .groupBy(F.col("class_iri").alias("cls"))
+        .agg(*[F.max(F.col("ancestor_iri") == r).alias(k)
+               for k, r in ROOTS.items()])
+    )
+
+
+def flagged(t: DataFrame, ancestors: DataFrame) -> DataFrame:
+    """Every triple of `t` plus one ROOTS flag column each: the flags of
+    its object class on an rdf:type row; False on every other row and
+    for a class outside every root closure."""
+    on = (F.col("pred") == V.TYPE) & (F.col("obj") == F.col("cls"))
+    return t.join(F.broadcast(class_flags(ancestors)), on, "left").select(
+        *t.columns, *[F.coalesce(F.col(k), F.lit(False)).alias(k) for k in ROOTS]
+    )
+
+
+def type_rows(t: DataFrame, *cols: str) -> DataFrame:
+    """(model_id, node, cls, *cols): the rdf:type triples of `t`."""
+    return t.filter(F.col("pred") == V.TYPE).select(
+        "model_id", F.col("subj").alias("node"), F.col("obj").alias("cls"),
+        *cols,
+    )
+
+
+def typed(t: DataFrame, ancestors: DataFrame, *cols: str) -> DataFrame:
+    """type_rows plus the ROOTS flags of each row's class."""
+    return type_rows(flagged(t, ancestors), *cols, *ROOTS)
 
 
 def sssom_best(sssom: DataFrame) -> DataFrame:

@@ -27,27 +27,36 @@ literals): in the default pipeline the only rule-minted class is
 GO_0005488 from B3 binding nodes (stage_b.py:264).
 
 Every function is a pure DataFrame program over the (model_id, subj,
-pred, obj) triple table plus the broadcastable ancestors dim — at
-cluster scale the triple table shuffles at most once per report on
-(model_id, node) and every dim join is a broadcast hash join.
+pred, obj) triple table plus the broadcastable ancestors dim. Root-
+closure membership is read, never re-derived: the class flags of
+dims.class_flags (one broadcast row per class under a root) ride on the
+type rows (dims.flagged / dims.typed), and each classification report
+is an aggregate over that flag frame — node_kinds and entity_mapping
+one groupBy keyed (model_id, node), model_report one more keyed
+model_id, reaction_venn one per-node groupBy plus one pass over the
+causal and part_of edges keyed by their other endpoint. The causal
+graph analytics share one directed and one undirected edge frame.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import operator
+from functools import reduce
+
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import vocab as V
+from .dims import flagged, type_rows, typed
 
 # classes a stage-B rule can assert (recognized by value, see module doc)
 RULE_ASSIGNED_CLASSES = [V.BINDING]
 
-# kind roots in NR-report iteration order (pathways, functions,
-# complexes — GoCAMReport.makeNRMappingReport:124/167/211); a node typed
-# into several closures keeps the first kind, like the report's `ids`
-# dedup set
-KIND_ROOTS = [("pathway", V.BP_ROOT), ("function", V.MF_ROOT),
-              ("complex", V.COMPLEX_GO)]
+# node kinds in NR-report iteration order (pathways, functions,
+# complexes — GoCAMReport.makeNRMappingReport:124/167/211) with the
+# class flag that admits each; a node typed into several closures keeps
+# the first kind, like the report's `ids` dedup set
+KINDS = [("pathway", "bp"), ("function", "mf"), ("complex", "complex")]
 
 # the causal relation family of Manuscript.getCausalComparison:479
 CAUSAL_FAMILY = [
@@ -60,35 +69,35 @@ CAUSAL_FAMILY = [
 _ROOTS = [V.BP_ROOT, V.MF_ROOT, V.CC_ROOT, V.COMPLEX_GO, V.MOLECULAR_EVENT]
 
 
-def _types(t: DataFrame) -> DataFrame:
-    return t.filter(F.col("pred") == V.TYPE).select(
-        "model_id", F.col("subj").alias("node"), F.col("obj").alias("cls")
-    )
+def _any(cond):
+    """1 if `cond` holds on any row of the group, else 0."""
+    return F.max(cond.cast("int"))
 
 
-def _closure(ancestors: DataFrame, root) -> DataFrame:
-    """(cls) classes in the subclass closure of `root` (incl. root)."""
-    roots = [root] if isinstance(root, str) else list(root)
-    return ancestors.filter(F.col("ancestor_iri").isin(roots)).select(
-        F.col("class_iri").alias("cls")
-    ).distinct()
+def _n_distinct(cond, col: str):
+    """Distinct values of `col` over the group's rows where `cond` holds."""
+    return F.size(F.collect_set(F.when(cond, F.col(col))))
+
+
+def _kind_rank():
+    """Index into KINDS of a type row's first admitting flag (null: none)."""
+    return F.coalesce(*[F.when(F.col(f), i) for i, (_, f) in enumerate(KINDS)])
+
+
+def _kind(rank):
+    return F.element_at(F.array(*[F.lit(k) for k, _ in KINDS]), rank + 1)
 
 
 def node_kinds(t: DataFrame, ancestors: DataFrame) -> DataFrame:
     """(model_id, node, kind) for every node typed into the BP / MF /
     protein-complex closures, kind precedence pathway > function >
     complex (GoCAMReport report iteration order)."""
-    memb = None
-    for rank, (kind, root) in enumerate(KIND_ROOTS):
-        m = _closure(ancestors, root).withColumn("rank", F.lit(rank)).withColumn(
-            "kind", F.lit(kind)
-        )
-        memb = m if memb is None else memb.unionByName(m)
-    hit = _types(t).join(F.broadcast(memb), "cls")
-    best = hit.groupBy("model_id", "node").agg(
-        F.min(F.struct("rank", "kind")).alias("bk")
+    return (
+        typed(t, ancestors).groupBy("model_id", "node")
+        .agg(F.min(_kind_rank()).alias("rank"))
+        .filter(F.col("rank").isNotNull())
+        .select("model_id", "node", _kind(F.col("rank")).alias("kind"))
     )
-    return best.select("model_id", "node", F.col("bk.kind").alias("kind"))
 
 
 def entity_mapping(t: DataFrame, ancestors: DataFrame) -> DataFrame:
@@ -99,44 +108,37 @@ def entity_mapping(t: DataFrame, ancestors: DataFrame) -> DataFrame:
     closure-inferred classes as comma-joined sorted lists (empty string
     when none).
 
-    Plan: one shuffle keyed (model_id, node); the closure and kind dims
-    are broadcast."""
-    kinds = node_kinds(t, ancestors)
-    ty = _types(t).filter(~F.col("cls").isin(_ROOTS))
-    asserted = ty.withColumn(
-        "bucket",
-        F.when(F.col("cls").isin(RULE_ASSIGNED_CLASSES), F.lit("rule"))
-        .otherwise(F.lit("curated")),
-    )
-    # strict non-root ancestors of every asserted class, minus asserted
-    anc = ancestors.filter(
+    Plan: one groupBy keyed (model_id, node) over the flagged type rows,
+    each left-joined to its class's strict ancestors (broadcast); the
+    kind is node_kinds' rank and the inferred list is set difference
+    inside the group."""
+    asserted = ~F.col("cls").isin(_ROOTS)
+    rule = F.col("cls").isin(RULE_ASSIGNED_CLASSES)
+    # strict non-root ancestors: the closure-inferred candidates
+    strict = ancestors.filter(
         (F.col("class_iri") != F.col("ancestor_iri"))
         & ~F.col("ancestor_iri").isin(_ROOTS)
     ).select(F.col("class_iri").alias("cls"), F.col("ancestor_iri").alias("sup"))
-    inferred = (
-        ty.join(F.broadcast(anc), "cls")
-        .select("model_id", "node", F.col("sup").alias("cls"))
-        .join(ty, ["model_id", "node", "cls"], "left_anti")
-        .withColumn("bucket", F.lit("inferred"))
-    )
-    buckets = asserted.select("model_id", "node", "cls", "bucket").unionByName(
-        inferred
-    )
-    agg = buckets.groupBy("model_id", "node").agg(
-        *[
-            F.concat_ws(
-                ",",
-                F.sort_array(
-                    F.collect_set(F.when(F.col("bucket") == b, F.col("cls")))
-                ),
-            ).alias(f"{b}_types")
-            for b in ("curated", "rule", "inferred")
-        ]
-    )
-    return kinds.join(agg, ["model_id", "node"], "left").select(
-        "model_id", "node", "kind",
-        *[F.coalesce(F.col(c), F.lit("")).alias(c)
-          for c in ("curated_types", "rule_types", "inferred_types")],
+
+    def classes(cond, col: str = "cls"):
+        return F.collect_set(F.when(cond, F.col(col)))
+
+    return (
+        typed(t, ancestors).join(F.broadcast(strict), "cls", "left")
+        .groupBy("model_id", "node")
+        .agg(
+            F.min(_kind_rank()).alias("rank"),
+            classes(asserted & ~rule).alias("curated"),
+            classes(asserted & rule).alias("rule"),
+            F.array_except(classes(asserted, "sup"), classes(asserted))
+            .alias("inferred"),
+        )
+        .filter(F.col("rank").isNotNull())
+        .select(
+            "model_id", "node", _kind(F.col("rank")).alias("kind"),
+            *[F.concat_ws(",", F.sort_array(b)).alias(f"{b}_types")
+              for b in ("curated", "rule", "inferred")],
+        )
     )
 
 
@@ -160,61 +162,40 @@ def model_report(t: DataFrame, ancestors: DataFrame) -> DataFrame:
                                             minted class (B3 binding)
       {kind}_deepened                       curated AND closure adds a
                                             strict non-root ancestor
-    """
-    ty = _types(t)
+
+    One row per model with any nonzero count."""
     em = entity_mapping(t, ancestors)
+    kind = F.col("kind")
+    curated, ruled, inferred = (
+        F.col(f"{b}_types") != "" for b in ("curated", "rule", "inferred")
+    )
+
+    def per_kind(name, cond):
+        return [F.sum(((kind == k) & cond).cast("long")).alias(name.format(k))
+                for k, _ in KINDS]
+
     plural = {"pathway": "n_pathways", "function": "n_functions",
               "complex": "n_complexes"}
-    per_kind = em.groupBy("model_id").agg(
-        *[
-            F.sum(((F.col("kind") == k)).cast("long")).alias(plural[k])
-            for k, _ in KIND_ROOTS
-        ],
-        *[
-            F.sum(
-                ((F.col("kind") == k) & (F.col("curated_types") == "")
-                 & (F.col("rule_types") == "")).cast("long")
-            ).alias(f"{k}_unclassified")
-            for k, _ in KIND_ROOTS
-        ],
-        *[
-            F.sum(
-                ((F.col("kind") == k) & (F.col("curated_types") == "")
-                 & (F.col("rule_types") != "")).cast("long")
-            ).alias(f"{k}_rule_classified")
-            for k, _ in KIND_ROOTS
-        ],
-        *[
-            F.sum(
-                ((F.col("kind") == k) & (F.col("curated_types") != "")
-                 & (F.col("inferred_types") != "")).cast("long")
-            ).alias(f"{k}_deepened")
-            for k, _ in KIND_ROOTS
-        ],
+    kinds = em.groupBy("model_id").agg(
+        *[F.sum((kind == k).cast("long")).alias(plural[k]) for k, _ in KINDS],
+        *per_kind("{}_unclassified", ~curated & ~ruled),
+        *per_kind("{}_rule_classified", ~curated & ruled),
+        *per_kind("{}_deepened", curated & inferred),
     )
-    prot = _closure(ancestors, V.PROTEIN_ROOT)
-    chem = _closure(ancestors, V.CHEMICAL_ROOT).join(prot, "cls", "left_anti")
-    cc = _closure(ancestors, V.CC_ROOT)
-    entities = ty.join(F.broadcast(prot), "cls").select(
-        "model_id", "node"
-    ).distinct().groupBy("model_id").agg(F.count("*").alias("n_proteins")).join(
-        ty.join(F.broadcast(chem), "cls").select("model_id", "node")
-        .distinct().groupBy("model_id").agg(F.count("*").alias("n_chemicals")),
-        "model_id", "full_outer",
-    ).join(
-        ty.join(F.broadcast(cc), "cls").select("model_id", "cls")
-        .distinct().groupBy("model_id").agg(F.count("*").alias("n_cc_classes")),
-        "model_id", "full_outer",
-    ).join(
-        t.filter(F.col("pred").isin(V.EDGE_PREDS)).select("model_id", "pred")
-        .distinct().groupBy("model_id").agg(F.count("*").alias("n_relations")),
-        "model_id", "full_outer",
+    entities = flagged(t, ancestors).groupBy("model_id").agg(
+        _n_distinct(F.col("protein"), "subj").alias("n_proteins"),
+        _n_distinct(F.col("chem") & ~F.col("protein"), "subj")
+        .alias("n_chemicals"),
+        _n_distinct(F.col("cc"), "obj").alias("n_cc_classes"),
+        _n_distinct(F.col("pred").isin(V.EDGE_PREDS), "pred")
+        .alias("n_relations"),
     )
-    out = per_kind.join(entities, "model_id", "full_outer")
-    fill = [c for c in out.columns if c != "model_id"]
-    return out.fillna(0, subset=fill).select(
-        "model_id",
-        *[F.col(c).cast("long").alias(c) for c in fill],
+    counts = kinds.columns[1:] + entities.columns[1:]
+    return (
+        entities.join(kinds, "model_id", "left")
+        .select("model_id", *[F.coalesce(F.col(c), F.lit(0)).cast("long")
+                              .alias(c) for c in counts])
+        .filter(reduce(operator.or_, [F.col(c) > 0 for c in counts]))
     )
 
 
@@ -222,9 +203,8 @@ def chebi_usage(t: DataFrame, ancestors: DataFrame) -> DataFrame:
     """Corpus-wide chemical-class usage counts
     (GoMappingReport.chebi_count, written :130-135): one row per
     chemical class with the number of type assertions using it."""
-    chem = _closure(ancestors, V.CHEMICAL_ROOT)
     return (
-        _types(t).join(F.broadcast(chem), "cls")
+        typed(t, ancestors).filter(F.col("chem"))
         .groupBy("cls").agg(F.count("*").alias("n"))
     )
 
@@ -235,7 +215,7 @@ def deprecated_terms_used(t: DataFrame, deprecated: DataFrame) -> DataFrame:
     (cls, n_models, n_uses). `deprecated` is any DataFrame with a `cls`
     column (in production: the ontology's owl:deprecated annotations)."""
     return (
-        _types(t).join(F.broadcast(deprecated.select("cls").distinct()), "cls")
+        type_rows(t).join(F.broadcast(deprecated.select("cls").distinct()), "cls")
         .groupBy("cls")
         .agg(
             F.countDistinct("model_id").alias("n_models"),
@@ -258,28 +238,41 @@ def inconsistent_models(violations: DataFrame) -> DataFrame:
     )
 
 
-def _xreffed_reactions(t: DataFrame, ancestors: DataFrame) -> DataFrame:
-    """(model_id, reaction, is_mf, is_me): converted reactions — nodes
-    typed molecular_event or into the MF closure, restricted to direct
-    conversions. Every Manuscript query guards `?reaction xref: ?xref`
-    "to ensure we don't count generated binding nodes - only direct
-    conversions" (Manuscript.java:243): in the reference only nodes
-    converted from a source reaction carry a Reactome hasDbXref. In this
-    engine the converted reaction's node id IS its source id verbatim,
-    and every generated node id carries the `~` separator (vocab.py
-    node-id scheme: io instances `{e}~{r}`, binding nodes
-    `{r}~bind~{n}`, location nodes `{o}~loc~{cc}`), so the equivalent
-    guard is `node NOT LIKE '%~%'`."""
-    mf = _closure(ancestors, V.MF_ROOT)
-    ty = _types(t).withColumnRenamed("node", "reaction").filter(
-        ~F.col("reaction").contains("~")
+def _reaction_nodes(t: DataFrame, ancestors: DataFrame) -> DataFrame:
+    """The node-flag frame of the Manuscript census: one row per subject
+    (model_id, node) from one groupBy over its flagged triples —
+    is_mf / is_me (typed into the MF closure / molecular_event),
+    has_function (a non-root MF type), bp_typed (a non-root BP type),
+    has_enabler, has_location, n_in / n_out (distinct inputs / outputs)
+    and `rx`, the converted-reaction guard.
+
+    `rx` = MF or molecular_event typed and a direct conversion. Every
+    Manuscript query guards `?reaction xref: ?xref` "to ensure we don't
+    count generated binding nodes - only direct conversions"
+    (Manuscript.java:243): in the reference only nodes converted from a
+    source reaction carry a Reactome hasDbXref. In this engine the
+    converted reaction's node id IS its source id verbatim, and every
+    generated node id carries the `~` separator (vocab.py node-id
+    scheme: io instances `{e}~{r}`, binding nodes `{r}~bind~{n}`,
+    location nodes `{o}~loc~{cc}`), so the equivalent guard is
+    `node NOT LIKE '%~%'`."""
+    pred, obj = F.col("pred"), F.col("obj")
+    return (
+        flagged(t, ancestors)
+        .groupBy("model_id", F.col("subj").alias("node"))
+        .agg(
+            _any(F.col("mf")).alias("is_mf"),
+            _any((pred == V.TYPE) & (obj == V.MOLECULAR_EVENT)).alias("is_me"),
+            _any(F.col("mf") & (obj != V.MF_ROOT)).alias("has_function"),
+            _any(F.col("bp") & (obj != V.BP_ROOT)).alias("bp_typed"),
+            _any(pred == V.ENABLED_BY).alias("has_enabler"),
+            _any(pred == V.OCCURS_IN).alias("has_location"),
+            _n_distinct(pred == V.HAS_INPUT, "obj").alias("n_in"),
+            _n_distinct(pred == V.HAS_OUTPUT, "obj").alias("n_out"),
+        )
+        .withColumn("rx", ~F.col("node").contains("~")
+                    & (F.col("is_mf") + F.col("is_me") > 0))
     )
-    return ty.join(
-        F.broadcast(mf.withColumn("m", F.lit(1))), "cls", "left"
-    ).groupBy("model_id", "reaction").agg(
-        F.max(F.coalesce(F.col("m"), F.lit(0))).alias("is_mf"),
-        F.max((F.col("cls") == V.MOLECULAR_EVENT).cast("int")).alias("is_me"),
-    ).filter((F.col("is_mf") == 1) | (F.col("is_me") == 1))
 
 
 def reaction_venn(t: DataFrame, ancestors: DataFrame) -> DataFrame:
@@ -296,76 +289,43 @@ def reaction_venn(t: DataFrame, ancestors: DataFrame) -> DataFrame:
       is_dissociation distinct inputs < distinct outputs (:319)
 
     `no_X` report files are filters over this table; runCounts numbers
-    are its column sums (see reaction_completeness)."""
-    rx = _xreffed_reactions(t, ancestors)
-    ty = _types(t).withColumnRenamed("node", "reaction")
-    mf_nonroot = _closure(ancestors, V.MF_ROOT).filter(F.col("cls") != V.MF_ROOT)
-    has_fn = ty.join(F.broadcast(mf_nonroot), "cls").select(
-        "model_id", "reaction"
-    ).distinct().withColumn("has_function", F.lit(1))
+    are its column sums (see reaction_completeness). Plan: the node
+    frame (_reaction_nodes), then every causally_upstream edge (both
+    directions — runCounts:254-263 joins through xref on both ends) and
+    part_of edge joined once to that frame on its other endpoint and
+    grouped by the reaction end."""
+    nodes = _reaction_nodes(t, ancestors)
+    pred = F.col("pred")
 
-    def edge(pred: str, name: str) -> DataFrame:
-        return t.filter(F.col("pred") == pred).select(
-            "model_id", F.col("subj").alias("reaction")
-        ).distinct().withColumn(name, F.lit(1))
+    def pairs(*ends):
+        return F.array(*[F.struct(F.col(a).alias("node"), F.col(b).alias("other"))
+                         for a, b in ends])
 
-    # causal requires the OTHER endpoint to be an xref'd reaction too
-    # (runCounts:254-263 joins through xref on both ends)
-    ups = t.filter(F.col("pred") == V.CAUSALLY_UPSTREAM).select(
-        "model_id", F.col("subj").alias("reaction"), F.col("obj").alias("other")
+    links = t.filter(pred.isin(V.CAUSALLY_UPSTREAM, V.PART_OF)).select(
+        "model_id", "pred",
+        F.inline(F.when(pred == V.PART_OF, pairs(("subj", "obj")))
+                 .otherwise(pairs(("subj", "obj"), ("obj", "subj")))),
     )
-    downs = t.filter(F.col("pred") == V.CAUSALLY_UPSTREAM).select(
-        "model_id", F.col("obj").alias("reaction"), F.col("subj").alias("other")
-    )
-    causal = (
-        ups.unionByName(downs)
-        .join(rx.select("model_id", F.col("reaction").alias("other")),
-              ["model_id", "other"], "left_semi")
-        .select("model_id", "reaction").distinct()
-        .withColumn("has_causal", F.lit(1))
-    )
-    # part_of to a pathway carrying a non-root BP-closure type
-    bp_nonroot = _closure(ancestors, V.BP_ROOT).filter(F.col("cls") != V.BP_ROOT)
-    bp_pw = ty.withColumnRenamed("reaction", "pathway").join(
-        F.broadcast(bp_nonroot), "cls"
-    ).select("model_id", "pathway").distinct()
-    has_bp = (
-        t.filter(F.col("pred") == V.PART_OF)
-        .select("model_id", F.col("subj").alias("reaction"),
-                F.col("obj").alias("pathway"))
-        .join(bp_pw, ["model_id", "pathway"], "left_semi")
-        .select("model_id", "reaction").distinct()
-        .withColumn("has_bp", F.lit(1))
-    )
-    io = (
-        t.filter(F.col("pred").isin(V.HAS_INPUT, V.HAS_OUTPUT))
-        .select("model_id", F.col("subj").alias("reaction"), "pred", "obj")
-        .groupBy("model_id", "reaction")
+    other = (
+        links.join(
+            nodes.select("model_id", F.col("node").alias("other"), "rx",
+                         "bp_typed"),
+            ["model_id", "other"],
+        )
+        .groupBy("model_id", "node")
         .agg(
-            F.countDistinct(
-                F.when(F.col("pred") == V.HAS_INPUT, F.col("obj"))
-            ).alias("n_in"),
-            F.countDistinct(
-                F.when(F.col("pred") == V.HAS_OUTPUT, F.col("obj"))
-            ).alias("n_out"),
+            _any((pred == V.CAUSALLY_UPSTREAM) & F.col("rx")).alias("has_causal"),
+            _any((pred == V.PART_OF) & (F.col("bp_typed") == 1)).alias("has_bp"),
         )
     )
-    out = (
-        rx.join(has_fn, ["model_id", "reaction"], "left")
-        .join(edge(V.ENABLED_BY, "has_enabler"), ["model_id", "reaction"], "left")
-        .join(edge(V.OCCURS_IN, "has_location"), ["model_id", "reaction"], "left")
-        .join(causal, ["model_id", "reaction"], "left")
-        .join(has_bp, ["model_id", "reaction"], "left")
-        .join(io, ["model_id", "reaction"], "left")
-    )
-    flags = ["has_function", "has_enabler", "has_location", "has_causal", "has_bp"]
-    return out.select(
-        "model_id", "reaction", "is_mf", "is_me",
-        *[F.coalesce(F.col(c), F.lit(0)).alias(c) for c in flags],
-        (F.coalesce("n_in", F.lit(0)) > F.coalesce("n_out", F.lit(0)))
-        .cast("int").alias("is_binding"),
-        (F.coalesce("n_in", F.lit(0)) < F.coalesce("n_out", F.lit(0)))
-        .cast("int").alias("is_dissociation"),
+    n_in, n_out = F.col("n_in"), F.col("n_out")
+    return nodes.filter("rx").join(other, ["model_id", "node"], "left").select(
+        "model_id", F.col("node").alias("reaction"), "is_mf", "is_me",
+        "has_function", "has_enabler", "has_location",
+        *[F.coalesce(F.col(c), F.lit(0)).alias(c)
+          for c in ("has_causal", "has_bp")],
+        (n_in > n_out).cast("int").alias("is_binding"),
+        (n_in < n_out).cast("int").alias("is_dissociation"),
     )
 
 
@@ -409,11 +369,13 @@ def causal_formats(t: DataFrame, ancestors: DataFrame) -> DataFrame:
     (first relation seen wins, :515); here the tie-break is the MINIMUM
     relation id per pair — deterministic, and the pair count per model
     is identical."""
-    rx = _xreffed_reactions(t, ancestors).select("model_id", "reaction")
+    rx = _reaction_nodes(t, ancestors).filter("rx").select(
+        "model_id", F.col("node").alias("reaction")
+    )
     direct = t.filter(F.col("pred").isin(CAUSAL_FAMILY)).select(
         "model_id", F.col("subj").alias("up"), "pred", F.col("obj").alias("down")
     )
-    binding = _types(t).filter(F.col("cls") == V.BINDING).select(
+    binding = type_rows(t).filter(F.col("cls") == V.BINDING).select(
         "model_id", F.col("node").alias("b")
     )
     hop = (
@@ -442,6 +404,88 @@ def causal_formats(t: DataFrame, ancestors: DataFrame) -> DataFrame:
     return pairs.groupBy("model_id", "pred").agg(F.count("*").alias("n_pairs"))
 
 
+def _causal_edges(t: DataFrame) -> DataFrame:
+    """(model_id, src, dst): the distinct directed causal edges,
+    materialized (the iterative analytics probe it every round)."""
+    return (
+        t.filter(F.col("pred").isin(CAUSAL_FAMILY))
+        .select("model_id", F.col("subj").alias("src"),
+                F.col("obj").alias("dst"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+
+
+def _undirected_causal(t: DataFrame) -> DataFrame:
+    """(model_id, a, b): the causal edges canonicalized to a = least,
+    b = greatest, so direction and multi-predicate parallel edges
+    collapse; self-loops drop."""
+    return (
+        t.filter(F.col("pred").isin(CAUSAL_FAMILY))
+        .select(
+            "model_id",
+            F.least("subj", "obj").alias("a"),
+            F.greatest("subj", "obj").alias("b"),
+        )
+        .filter(F.col("a") < F.col("b"))
+        .distinct()
+    )
+
+
+def _node_triangles(t: DataFrame) -> DataFrame:
+    """(model_id, node, degree, n_tri) for every node of the undirected
+    causal graph. Triangles are the standard distributed two-join
+    enumeration — wedge build then close — with every join keyed by
+    (model_id, node), so no cross-model hub node ever becomes a single
+    shuffle key; each triangle materializes exactly once as a < b < c
+    and credits its three corners via one explode."""
+    e = _undirected_causal(t).localCheckpoint(eager=True)
+    deg = (
+        e.select("model_id", F.col("a").alias("node"))
+        .unionAll(e.select("model_id", F.col("b").alias("node")))
+        .groupBy("model_id", "node")
+        .agg(F.count("*").alias("degree"))
+    )
+    closing = e.select("model_id", "a", F.col("b").alias("c"))
+    tri = (
+        e.join(
+            e.select(
+                "model_id", F.col("a").alias("b"), F.col("b").alias("c")
+            ),
+            ["model_id", "b"],
+        )
+        .join(closing, ["model_id", "a", "c"])
+        .select(
+            "model_id",
+            F.explode(F.array("a", "b", "c")).alias("node"),
+        )
+        .groupBy("model_id", "node")
+        .agg(F.count("*").alias("n_tri"))
+    )
+    return deg.join(tri, ["model_id", "node"], "left").withColumn(
+        "n_tri", F.coalesce(F.col("n_tri"), F.lit(0)).cast("long")
+    )
+
+
+def _hub_pivots(t: DataFrame, hub_cap: int) -> DataFrame:
+    """(model_id, node, nbr, w_deg, deg_f): the undirected causal
+    adjacency in both directions, restricted to neighbors (pivots) whose
+    own full degree w_deg is <= hub_cap, with deg_f = the node's degree
+    over that restricted adjacency. The shared-neighbor join over it
+    fans out at most hub_cap^2 rows per pivot. The adjacency is
+    symmetric, so a pivot's full degree is its row count as `nbr`."""
+    e = _undirected_causal(t)
+    return (
+        e.select("model_id", F.col("a").alias("node"), F.col("b").alias("nbr"))
+        .unionAll(e.select("model_id", F.col("b").alias("node"),
+                           F.col("a").alias("nbr")))
+        .withColumn("w_deg", F.count("*").over(Window.partitionBy("model_id", "nbr")))
+        .filter(F.col("w_deg") <= hub_cap)
+        .withColumn("deg_f", F.count("*").over(Window.partitionBy("model_id", "node")))
+        .localCheckpoint(eager=True)
+    )
+
+
 def causal_paths(t: DataFrame, max_depth: int = 4) -> DataFrame:
     """Bounded-depth causal reachability: the min-hop closure of the
     8-relation causal family within each model — the "what is upstream
@@ -464,13 +508,7 @@ def causal_paths(t: DataFrame, max_depth: int = 4) -> DataFrame:
     driver traffic is the 1-row empty-frontier probe that exits early.
     Keys carry model_id, so no cross-model hub node ever becomes a
     single shuffle key."""
-    edges = (
-        t.filter(F.col("pred").isin(CAUSAL_FAMILY))
-        .select("model_id", F.col("subj").alias("src"),
-                F.col("obj").alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    edges = _causal_edges(t)
     seen = edges.withColumn("depth", F.lit(1))
     frontier = edges
     for depth in range(2, max_depth + 1):
@@ -530,13 +568,7 @@ def causal_pagerank(
     the node domain, never the corpus.
 
     Returns (model_id, node, pr, n_nodes)."""
-    edges = (
-        t.filter(F.col("pred").isin(CAUSAL_FAMILY))
-        .select("model_id", F.col("subj").alias("src"),
-                F.col("obj").alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    edges = _causal_edges(t)
     nodes = (
         edges.select("model_id", F.col("src").alias("node"))
         .unionByName(edges.select("model_id", F.col("dst").alias("node")))
@@ -606,53 +638,19 @@ def causal_triangles(t: DataFrame) -> DataFrame:
     corpus (the motif extension of the single-hop causal census,
     Manuscript.getCausalComparison:438-547).
 
-    Edges canonicalize to (a = least, b = greatest) so direction and
-    multi-predicate parallel edges collapse, each triangle materializes
-    exactly once as a < b < c, and self-loops drop. Triangles are the
-    standard distributed two-join enumeration — wedge build then close —
-    with every join keyed by (model_id, node), so no cross-model hub
-    node ever becomes a single shuffle key; wedge counts come from the
-    degree table, not an extra join.
+    The model totals are sums over node_clustering's per-node
+    (degree, n_tri) frame (_node_triangles): n_edges = sum(d) / 2,
+    n_wedges = sum(d * (d - 1)) / 2, n_triangles = sum(n_tri) / 3 (each
+    triangle credits three corners) — no second enumeration.
 
     Returns (model_id, n_edges, n_wedges, n_triangles, clustering) with
     clustering = round(3 * triangles / wedges, 6) (0.0 when wedge-free).
     """
-    e = (
-        t.filter(F.col("pred").isin(CAUSAL_FAMILY))
-        .select(
-            "model_id",
-            F.least("subj", "obj").alias("a"),
-            F.greatest("subj", "obj").alias("b"),
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    deg = (
-        e.select("model_id", F.col("a").alias("node"))
-        .unionAll(e.select("model_id", F.col("b").alias("node")))
-        .groupBy("model_id", "node")
-        .agg(F.count("*").alias("d"))
-    )
-    wedges = deg.groupBy("model_id").agg(
-        (F.sum(F.col("d") * (F.col("d") - 1)) / 2).cast("long").alias("n_wedges")
-    )
-    closing = e.select("model_id", "a", F.col("b").alias("c"))
-    tri = (
-        e.join(
-            e.select("model_id", F.col("a").alias("b"), F.col("b").alias("c")),
-            ["model_id", "b"],
-        )
-        .join(closing, ["model_id", "a", "c"])
-        .groupBy("model_id")
-        .agg(F.count("*").alias("n_triangles"))
-    )
-    edges_per = e.groupBy("model_id").agg(F.count("*").alias("n_edges"))
-    out = (
-        edges_per.join(wedges, "model_id")
-        .join(tri, "model_id", "left")
-        .withColumn("n_triangles",
-                    F.coalesce(F.col("n_triangles"), F.lit(0)).cast("long"))
+    d = F.col("degree")
+    out = _node_triangles(t).groupBy("model_id").agg(
+        (F.sum(d) / 2).cast("long").alias("n_edges"),
+        (F.sum(d * (d - 1)) / 2).cast("long").alias("n_wedges"),
+        (F.sum("n_tri") / 3).cast("long").alias("n_triangles"),
     )
     return out.select(
         "model_id", "n_edges", "n_wedges", "n_triangles",
@@ -723,13 +721,7 @@ def dag_levels(t: DataFrame, max_levels: int = 8) -> DataFrame:
     on a cluster) so round k's anti-join probes a materialized leaf.
     All keys carry model_id: no cross-model hub. The early-exit probe
     is a 1-row head — the only driver traffic."""
-    edges = (
-        t.filter(F.col("pred").isin(CAUSAL_FAMILY))
-        .select("model_id", F.col("subj").alias("src"),
-                F.col("obj").alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    edges = _causal_edges(t)
     nodes = (
         edges.select("model_id", F.col("src").alias("node"))
         .unionByName(edges.select("model_id", F.col("dst").alias("node")))
@@ -1019,45 +1011,10 @@ def node_clustering(t: DataFrame) -> DataFrame:
     cliques (the node-level drill-down of causal_triangles' global
     coefficient): c(v) = 2 * tri(v) / (d(v) * (d(v) - 1)).
 
-    Same canonical edge set and two-join triangle enumeration as
-    causal_triangles, every join keyed by (model_id, node); each closed
-    triangle credits its three corners via one posexplode (no second
-    enumeration pass). Only nodes with degree >= 2 (wedge-capable)
+    The per-node (degree, n_tri) frame (_node_triangles) is the one
+    causal_triangles sums; only nodes with degree >= 2 (wedge-capable)
     surface. Coefficient is fixed-point-rounded from exact integer
     counts. Returns (model_id, node, degree, n_tri, coeff)."""
-    e = (
-        t.filter(F.col("pred").isin(CAUSAL_FAMILY))
-        .select(
-            "model_id",
-            F.least("subj", "obj").alias("a"),
-            F.greatest("subj", "obj").alias("b"),
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    deg = (
-        e.select("model_id", F.col("a").alias("node"))
-        .unionAll(e.select("model_id", F.col("b").alias("node")))
-        .groupBy("model_id", "node")
-        .agg(F.count("*").alias("degree"))
-    )
-    closing = e.select("model_id", "a", F.col("b").alias("c"))
-    tri = (
-        e.join(
-            e.select(
-                "model_id", F.col("a").alias("b"), F.col("b").alias("c")
-            ),
-            ["model_id", "b"],
-        )
-        .join(closing, ["model_id", "a", "c"])
-        .select(
-            "model_id",
-            F.explode(F.array("a", "b", "c")).alias("node"),
-        )
-        .groupBy("model_id", "node")
-        .agg(F.count("*").alias("n_tri"))
-    )
     coeff = F.floor(
         2 * F.col("n_tri")
         / (F.col("degree") * (F.col("degree") - 1))
@@ -1065,11 +1022,7 @@ def node_clustering(t: DataFrame) -> DataFrame:
         + F.lit(0.5)
     ) / F.lit(1e6)
     return (
-        deg.filter(F.col("degree") >= 2)
-        .join(tri, ["model_id", "node"], "left")
-        .withColumn(
-            "n_tri", F.coalesce(F.col("n_tri"), F.lit(0)).cast("long")
-        )
+        _node_triangles(t).filter(F.col("degree") >= 2)
         .select(
             "model_id",
             "node",
@@ -1113,80 +1066,22 @@ def neighbor_jaccard(
     Returns (model_id, node_a, node_b, n_common, jaccard) for pairs
     with n_common >= min_common, node_a < node_b.
     """
-    e = (
-        t.filter(F.col("pred").isin(CAUSAL_FAMILY))
-        .select(
-            "model_id",
-            F.least("subj", "obj").alias("a"),
-            F.greatest("subj", "obj").alias("b"),
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-    )
-    adj = e.select(
-        "model_id", F.col("a").alias("node"), F.col("b").alias("nbr")
-    ).unionAll(
-        e.select(
-            "model_id", F.col("b").alias("node"), F.col("a").alias("nbr")
-        )
-    ).localCheckpoint(eager=True)
-    deg = adj.groupBy("model_id", "node").agg(F.count("*").alias("deg"))
-    # hub filter on the PIVOT side: drop neighbors whose own degree
-    # exceeds hub_cap, then recompute the filtered degrees both the
-    # numerator and denominator use
-    adj_f = adj.join(
-        deg.filter(F.col("deg") <= hub_cap).select(
-            "model_id", F.col("node").alias("nbr")
-        ),
-        ["model_id", "nbr"],
-    )
-    deg_f = adj_f.groupBy("model_id", "node").agg(
-        F.count("*").alias("deg_f")
-    )
-    pairs = (
-        adj_f.select(
-            "model_id", F.col("node").alias("node_a"), "nbr"
-        )
-        .join(
-            adj_f.select(
-                "model_id", F.col("node").alias("node_b"), "nbr"
-            ),
-            ["model_id", "nbr"],
-        )
+    p = _hub_pivots(t, hub_cap)
+    n_common = F.col("n_common")
+    return (
+        p.select("model_id", F.col("node").alias("node_a"), "nbr",
+                 F.col("deg_f").alias("da"))
+        .join(p.select("model_id", F.col("node").alias("node_b"), "nbr",
+                       F.col("deg_f").alias("db")), ["model_id", "nbr"])
         .filter(F.col("node_a") < F.col("node_b"))
         .groupBy("model_id", "node_a", "node_b")
-        .agg(F.count("*").alias("n_common"))
-        .filter(F.col("n_common") >= min_common)
-    )
-    jac = F.floor(
-        F.col("n_common")
-        / (F.col("da") + F.col("db") - F.col("n_common"))
-        * 1e6
-        + F.lit(0.5)
-    ) / F.lit(1e6)
-    return (
-        pairs.join(
-            deg_f.select(
-                "model_id",
-                F.col("node").alias("node_a"),
-                F.col("deg_f").alias("da"),
-            ),
-            ["model_id", "node_a"],
-        )
-        .join(
-            deg_f.select(
-                "model_id",
-                F.col("node").alias("node_b"),
-                F.col("deg_f").alias("db"),
-            ),
-            ["model_id", "node_b"],
-        )
+        .agg(F.count("*").alias("n_common"), F.max("da").alias("da"),
+             F.max("db").alias("db"))
+        .filter(n_common >= min_common)
         .select(
-            "model_id",
-            "node_a",
-            "node_b",
-            "n_common",
-            jac.alias("jaccard"),
+            "model_id", "node_a", "node_b", "n_common",
+            (F.floor(n_common / (F.col("da") + F.col("db") - n_common) * 1e6
+                     + F.lit(0.5)) / F.lit(1e6)).alias("jaccard"),
         )
     )
 
@@ -1215,46 +1110,11 @@ def resource_allocation(
     Returns (model_id, node_a, node_b, n_common, ra_micro) for pairs
     with n_common >= min_common, node_a < node_b.
     """
-    e = (
-        t.filter(F.col("pred").isin(CAUSAL_FAMILY))
-        .select(
-            "model_id",
-            F.least("subj", "obj").alias("a"),
-            F.greatest("subj", "obj").alias("b"),
-        )
-        .filter(F.col("a") < F.col("b"))
-        .distinct()
-    )
-    adj = e.select(
-        "model_id", F.col("a").alias("node"), F.col("b").alias("nbr")
-    ).unionAll(
-        e.select(
-            "model_id", F.col("b").alias("node"), F.col("a").alias("nbr")
-        )
-    ).localCheckpoint(eager=True)
-    deg = adj.groupBy("model_id", "node").agg(F.count("*").alias("deg"))
-    # pivot filter keeps the pivot's own (unfiltered) degree: RA weights
-    # by how many neighbors the shared partner spreads its "resource"
-    # across — that is its full adjacency, capped pivots only bound the
-    # join fan-out
-    adj_f = adj.join(
-        deg.filter(F.col("deg") <= hub_cap).select(
-            "model_id",
-            F.col("node").alias("nbr"),
-            F.col("deg").alias("w_deg"),
-        ),
-        ["model_id", "nbr"],
-    )
+    p = _hub_pivots(t, hub_cap)
     return (
-        adj_f.select(
-            "model_id", F.col("node").alias("node_a"), "nbr", "w_deg"
-        )
-        .join(
-            adj_f.select(
-                "model_id", F.col("node").alias("node_b"), "nbr"
-            ),
-            ["model_id", "nbr"],
-        )
+        p.select("model_id", F.col("node").alias("node_a"), "nbr", "w_deg")
+        .join(p.select("model_id", F.col("node").alias("node_b"), "nbr"),
+              ["model_id", "nbr"])
         .filter(F.col("node_a") < F.col("node_b"))
         .groupBy("model_id", "node_a", "node_b")
         .agg(

@@ -7,18 +7,19 @@ go-cam-shapes-edited.shex`) and renders the violations with
 `scripts/readable_shex_report.py`. Here the same shape constraints are
 re-expressed as predicates over one node-flag frame:
 
-  class flags  one row per ontology class under a checked root (mf,
-               bp, cc, chem booleans), one groupBy of the ontology
-               closure — bounded by ontology size, broadcast;
+  class flags  dims.typed: the type triples with the shared root
+               flags (dims.class_flags, broadcast);
   node flags   one row per typed (model_id, node): occurrent,
                BP-typed, chemical-typed, and the list of its non-CC
-               types — one groupBy over the type triples;
-  edges        one distinct scan of the checked predicates, joined to
-               the node flags on subject and on object. The seven
-               per-edge checks are boolean predicates over that row,
-               exploded into violations; the two max-1 checks are one
-               groupBy. A class absent from the ontology carries no
-               flag, so it is neither occurrent nor CC.
+               types — one groupBy over the type rows;
+  edges        the checked predicates in long form, one row per edge
+               end (subject and object), joined ONCE to the node flags
+               and regrouped by the edge key, which also dedups the
+               edges. The seven per-edge checks are boolean predicates
+               over that row, exploded into violations; the two max-1
+               checks are one groupBy. A class outside the ontology
+               carries every flag False, so it is neither occurrent
+               nor CC.
 
 Shapes checked (the go-cam-shapes invariants the emitted models rely
 on; names follow the readable report's categories):
@@ -61,6 +62,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import vocab as V
+from .dims import typed
 
 CAUSAL_PREDS = [
     V.CAUSALLY_UPSTREAM, V.PROVIDES_INPUT,
@@ -77,24 +79,11 @@ CHECKS = [
 
 _COLS = ["check", "model_id", "node", "pred", "obj", "detail"]
 
-_ROOTS = {"mf": V.MF_ROOT, "bp": V.BP_ROOT, "cc": V.CC_ROOT,
-          "chem": V.CHEMICAL_ROOT}
 _SM_PREDS = [V.SM_ACTIVATOR, V.SM_INHIBITOR]
 _MAX1_PREDS = [V.ENABLED_BY, V.OCCURS_IN]
 _CHECKED_PREDS = [V.PART_OF, V.INTERACTS_WITH, *_MAX1_PREDS, *_SM_PREDS,
                   *CAUSAL_PREDS, *IO_PREDS]
 _NOT_PHYSICAL = "target is MF/BP-typed (occurrent), expected physical entity"
-
-
-def class_flags(ancestors: DataFrame) -> DataFrame:
-    """(cls, mf, bp, cc, chem): one row per class under any of the four
-    roots, one boolean per root (broadcast-sized)."""
-    return (
-        ancestors.filter(F.col("ancestor_iri").isin(list(_ROOTS.values())))
-        .groupBy(F.col("class_iri").alias("cls"))
-        .agg(*[F.max(F.col("ancestor_iri") == r).alias(k)
-               for k, r in _ROOTS.items()])
-    )
 
 
 def _flag(name: str):
@@ -105,15 +94,12 @@ def _flag(name: str):
 def _node_flags(t: DataFrame, ancestors: DataFrame) -> DataFrame:
     """(model_id, node, occ, bp, chem, non_cc) per typed node. `non_cc`
     keeps one entry per type row, duplicates included."""
-    types = t.filter(F.col("pred") == V.TYPE).select(
-        "model_id", F.col("subj").alias("node"), F.col("obj").alias("cls")
-    ).join(F.broadcast(class_flags(ancestors)), "cls", "left")
-    return types.groupBy("model_id", "node").agg(
-        F.max(_flag("mf") | _flag("bp") | (F.col("cls") == V.MOLECULAR_EVENT))
+    return typed(t, ancestors).groupBy("model_id", "node").agg(
+        F.max(F.col("mf") | F.col("bp") | (F.col("cls") == V.MOLECULAR_EVENT))
         .alias("occ"),
-        F.max(_flag("bp")).alias("bp"),
-        F.max(_flag("chem")).alias("chem"),
-        F.collect_list(F.when(~_flag("cc"), F.col("cls"))).alias("non_cc"),
+        F.max("bp").alias("bp"),
+        F.max("chem").alias("chem"),
+        F.collect_list(F.when(~F.col("cc"), F.col("cls"))).alias("non_cc"),
     )
 
 
@@ -126,14 +112,24 @@ def shex_validate(t: DataFrame, ancestors: DataFrame) -> DataFrame:
     detail); empty = every model conforms."""
     edges = t.filter(F.col("pred").isin(_CHECKED_PREDS)).select(
         "model_id", F.col("subj").alias("node"), "pred", "obj"
-    ).distinct()
-    nf = _node_flags(t, ancestors)
-    subj = nf.select("model_id", "node", F.col("occ").alias("s_occ"))
-    obj = nf.select("model_id", F.col("node").alias("obj"),
-                    *[F.col(c).alias(f"o_{c}")
-                      for c in ("occ", "bp", "chem", "non_cc")])
-    e = edges.join(subj, ["model_id", "node"], "left").join(
-        obj, ["model_id", "obj"], "left"
+    )
+    # one row per edge end, so the node flags are joined (and
+    # aggregated) once for both ends; the regroup dedups the edges
+    ends = edges.select("*", F.inline(F.array(
+        F.struct(F.lit(True).alias("is_subj"), F.col("node").alias("end")),
+        F.struct(F.lit(False).alias("is_subj"), F.col("obj").alias("end")),
+    )))
+    nf = _node_flags(t, ancestors).withColumnRenamed("node", "end")
+    e = ends.join(nf, ["model_id", "end"], "left").groupBy(
+        "model_id", "node", "pred", "obj"
+    ).agg(
+        F.max(F.when(F.col("is_subj"), F.col("occ"))).alias("s_occ"),
+        *[F.max(F.when(~F.col("is_subj"), F.col(c))).alias(f"o_{c}")
+          for c in ("occ", "bp", "chem")],
+        # the object's one non_cc list (an array max would force a
+        # sort-based aggregate)
+        F.get(F.collect_set(F.when(~F.col("is_subj"), F.col("non_cc"))), 0)
+        .alias("o_non_cc"),
     )
 
     pred = F.col("pred")

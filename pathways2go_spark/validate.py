@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import vocab as V
-from .shex import class_flags
+from .dims import typed
 
 _KNOWN_PREDS = set(V.EDGE_PREDS) | {V.TYPE, V.EXACT, V.LABEL}
 
@@ -105,10 +105,7 @@ def mf_bp_overlap(t: DataFrame, ancestors: DataFrame) -> DataFrame:
         )))
 
     return (
-        _with_rule(t).filter(F.col("pred") == V.TYPE)
-        .select("model_id", F.col("subj").alias("node"),
-                F.col("obj").alias("cls"), "rule")
-        .join(F.broadcast(class_flags(ancestors)), "cls")
+        typed(_with_rule(t), ancestors, "rule")
         .groupBy("model_id", "node")
         .agg(evidence("mf").alias("mf_ev"), evidence("bp").alias("bp_ev"))
         .filter(F.col("mf_ev").isNotNull() & F.col("bp_ev").isNotNull())

@@ -556,3 +556,139 @@ def test_resource_allocation_known_graph(spark):
     # a-h share pivot b (deg 2): 500000; b-h share a (deg 2): 500000
     assert out[("a", "h")]["ra_micro"] == 500000
     assert out[("b", "h")]["ra_micro"] == 500000
+
+
+def _seeded_report_inputs(spark):
+    """One hand-built corpus plus a small closure dim. Seeds: a node
+    typed both BP and MF, a class under both the chemical and protein
+    roots, a type outside the ontology, a root-only MF type, a
+    `~`-suffixed generated node carrying an MF type, part_of to a
+    pathway whose only BP type is the root, causally_upstream to a
+    non-xref'd node, a binding-node hop, duplicated type and edge rows,
+    a model with only an unknown type and a model with only an edge."""
+    anc = [(r, r) for r in (V.MF_ROOT, V.BP_ROOT, V.CC_ROOT, V.COMPLEX_GO,
+                            V.CHEMICAL_ROOT, V.PROTEIN_ROOT)]
+    for cls, sups in {
+        V.BINDING: [V.MF_ROOT],
+        "GO_MF1": ["GO_MFMID", V.MF_ROOT], "GO_MFMID": [V.MF_ROOT],
+        "GO_BP1": [V.BP_ROOT], "GO_CC1": [V.CC_ROOT],
+        "GO_CPLX1": [V.COMPLEX_GO, V.CC_ROOT],
+        "CHEBI_PX": [V.PROTEIN_ROOT, V.CHEMICAL_ROOT],
+        "CHEBI_C1": ["CHEBI_CMID", V.CHEMICAL_ROOT],
+        "CHEBI_CMID": [V.CHEMICAL_ROOT],
+        "UniProtKB_U1": [V.PROTEIN_ROOT],
+    }.items():
+        anc += [(cls, cls)] + [(cls, s) for s in sups]
+    types = [
+        ("PW1", "GO_BP1"), ("PW0", V.BP_ROOT),
+        ("X1", "GO_BP1"), ("X1", "GO_MF1"),
+        ("R1", "GO_MF1"), ("R1", "GO_MF1"), ("R1", V.MOLECULAR_EVENT),
+        ("R2", V.MF_ROOT), ("R3", V.MOLECULAR_EVENT), ("R3~gen", "GO_MF1"),
+        ("R4", "FOREIGN_1"), ("E1", "UniProtKB_U1"), ("S1", "CHEBI_PX"),
+        ("S2", "CHEBI_C1"), ("S2", "CHEBI_C1"), ("L1", "GO_CC1"),
+        ("C1", "GO_CPLX1"), ("R1~bind~1", V.BINDING),
+    ]
+    edges = [
+        ("R1", V.ENABLED_BY, "E1"), ("R1", V.ENABLED_BY, "E1"),
+        ("R1", V.OCCURS_IN, "L1"), ("R1", V.PART_OF, "PW1"),
+        ("R1", V.HAS_INPUT, "S1"), ("R1", V.HAS_INPUT, "S2"),
+        ("R1", V.HAS_INPUT, "S2"), ("R1", V.HAS_OUTPUT, "C1"),
+        ("R2", V.ENABLED_BY, "E1"), ("R2", V.PART_OF, "PW0"),
+        ("R1", V.CAUSALLY_UPSTREAM, "R2"),
+        ("R3", V.CAUSALLY_UPSTREAM, "R3~gen"),
+        ("R3", V.HAS_OUTPUT, "S1"), ("R3", V.HAS_OUTPUT, "S2"),
+        ("R1", V.PROVIDES_INPUT, "R1~bind~1"),
+        ("R1~bind~1", V.DIRECTLY_POS_REGULATES, "R3"),
+        ("X1", V.PART_OF, "PW1"),
+    ]
+    t = spark.createDataFrame(
+        [("m1", n, V.TYPE, c) for n, c in types]
+        + [("m1", *e) for e in edges]
+        + [("m2", "Q1", V.TYPE, "FOREIGN_2"), ("m3", "A", V.PART_OF, "B")],
+        "model_id string, subj string, pred string, obj string",
+    )
+    return t, spark.createDataFrame(anc, "class_iri string, ancestor_iri string")
+
+
+def test_seeded_report_rows_exact(spark):
+    """Exact rows of every flag-reading report on the seeded corpus:
+    kind precedence, the n_chemicals protein exclusion, root-only and
+    out-of-ontology types, the `~` guard, root-only pathways, the
+    xref'd-other causal rule, the binding hop and duplicate rows."""
+    from pathways2go_spark import analytics as G
+    from pathways2go_spark import reports as RP
+
+    t, anc = _seeded_report_inputs(spark)
+
+    eco, by = V.ECO_IMPORTED, "pathways2go_spark"
+    want = {
+        "node_kinds": [
+            ("m1", "C1", "complex"), ("m1", "PW0", "pathway"),
+            ("m1", "PW1", "pathway"), ("m1", "R1", "function"),
+            ("m1", "R1~bind~1", "function"), ("m1", "R2", "function"),
+            ("m1", "R3~gen", "function"), ("m1", "X1", "pathway"),
+        ],
+        "entity_mapping": [
+            ("m1", "C1", "complex", "GO_CPLX1", "", ""),
+            ("m1", "PW0", "pathway", "", "", ""),
+            ("m1", "PW1", "pathway", "GO_BP1", "", ""),
+            ("m1", "R1", "function", "GO_MF1", "", "GO_MFMID"),
+            ("m1", "R1~bind~1", "function", "", V.BINDING, ""),
+            ("m1", "R2", "function", "", "", ""),
+            ("m1", "R3~gen", "function", "GO_MF1", "", "GO_MFMID"),
+            ("m1", "X1", "pathway", "GO_BP1,GO_MF1", "", "GO_MFMID"),
+        ],
+        # kinds, unclassified, rule_classified, deepened (pathway,
+        # function, complex each), then proteins, chemicals, cc, relations
+        "model_report": [
+            ("m1", 3, 4, 1, 1, 1, 0, 0, 1, 0, 1, 2, 0, 2, 1, 2, 8),
+            ("m3", 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 1),
+        ],
+        "reaction_venn": [
+            ("m1", "R1", 1, 1, 1, 1, 1, 1, 1, 1, 0),
+            ("m1", "R2", 1, 0, 0, 1, 0, 1, 0, 0, 0),
+            ("m1", "R3", 0, 1, 0, 0, 0, 0, 0, 0, 1),
+            ("m1", "X1", 1, 0, 1, 0, 0, 0, 1, 0, 0),
+        ],
+        "reaction_completeness": [(4, 3, 1, 2, 2, 1, 2, 2, 2, 1, 3, 1, 1, 1)],
+        "causal_formats": [("m1", V.CAUSALLY_UPSTREAM, 1),
+                           ("m1", V.DIRECTLY_POS_REGULATES, 1)],
+        "chebi_usage": [("CHEBI_C1", 2), ("CHEBI_PX", 1)],
+        "count_unclassified": [("m1", 2), ("m2", 1)],
+        "gpad_export": [
+            ("UniProtKB", "U1", q, go, "m1", eco, by)
+            for q, go in [("enables", V.MF_ROOT), ("enables", "GO_MF1"),
+                          ("involved_in", V.BP_ROOT),
+                          ("involved_in", "GO_BP1")]
+        ],
+    }
+    got = {
+        "node_kinds": RP.node_kinds(t, anc),
+        "entity_mapping": RP.entity_mapping(t, anc),
+        "model_report": RP.model_report(t, anc),
+        "reaction_venn": RP.reaction_venn(t, anc),
+        "reaction_completeness": RP.reaction_completeness(t, anc),
+        "causal_formats": RP.causal_formats(t, anc),
+        "chebi_usage": RP.chebi_usage(t, anc),
+        "count_unclassified": G.count_unclassified(t, anc),
+        "gpad_export": G.gpad_export(t, anc),
+    }
+    for name, df in got.items():
+        assert sorted(tuple(r) for r in df.collect()) == want[name], name
+
+
+def test_report_plans_are_flat(spark, fixture_paths):
+    """reaction_venn and model_report are aggregates over the shared
+    class-flag frame: each executed plan over the fixture triples stays
+    within 14 exchanges, with no cartesian product, no nested-loop join
+    and no row-at-a-time Python UDF. Reads the plan only; runs no job."""
+    from pathways2go_spark import reports as RP
+
+    t = spark.read.parquet(fixture_paths["expected_triples"])
+    anc = load_dims(spark, os.path.dirname(fixture_paths["documents"])).onto_ancestors
+    for report in (RP.reaction_venn, RP.model_report):
+        plan = report(t, anc)._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange") <= 14, (report.__name__, plan)
+        for bad in ("CartesianProduct", "BroadcastNestedLoopJoin",
+                    "BatchEvalPython"):
+            assert bad not in plan, (report.__name__, plan)

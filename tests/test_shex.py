@@ -5,6 +5,7 @@ control the reference gets from Minerva's violation reports
 
 from __future__ import annotations
 
+import re
 from collections import Counter
 
 import pytest
@@ -214,3 +215,17 @@ def test_shape_checks_plan_is_flat(spark, fixture_paths, dims):
     assert plan.count("Exchange") <= 15, plan
     for bad in ("CartesianProduct", "BroadcastNestedLoopJoin", "BatchEvalPython"):
         assert bad not in plan, plan
+
+
+def test_node_flags_aggregated_once(spark, fixture_paths, dims):
+    """Both ends of every checked edge read one node-flag aggregate: the
+    executed plan over the fixture triples holds exactly one final
+    aggregate keyed (model_id, node). Reads the plan only; runs no job."""
+    t = spark.read.parquet(fixture_paths["expected_triples"])
+    v = shex.shex_validate(t, dims.onto_ancestors)
+    plan = v._jdf.queryExecution().executedPlan().toString()
+    keyed = re.findall(
+        r"Aggregate\(keys=\[model_id#\d+, node#\d+\], functions=\[(?!partial_)",
+        plan,
+    )
+    assert len(keyed) == 1, plan
