@@ -55,7 +55,6 @@ _AUDIT_COLS = ["rule", "model_id", "reaction", "detail"]
 class PipelineResult:
     triples: DataFrame          # model_id, subj, pred, obj, evidence, rule
     audit: DataFrame            # rule, model_id, reaction, detail
-    drug_reactions: DataFrame
 
 
 def _stage_b_distributed(
@@ -357,7 +356,7 @@ def _distributed(
     )
     if big.isEmpty():
         tt, audit = _split_audit(_stage_b_local(t, drugs, prepared))
-        return PipelineResult(triples=tt, audit=audit, drug_reactions=drugs)
+        return PipelineResult(triples=tt, audit=audit)
 
     t_small = t.join(big, "model_id", "left_anti")
     t_big = t.join(big, "model_id", "left_semi")
@@ -372,7 +371,6 @@ def _distributed(
     return PipelineResult(
         triples=ts.unionByName(tb),
         audit=audit_s.unionByName(audit_b.select(*_AUDIT_COLS)),
-        drug_reactions=drugs,
     )
 
 
@@ -384,7 +382,7 @@ def run_pipeline(
     local_threshold: int = 500_000,
     prepared: PreparedDims | None = None,
 ) -> PipelineResult:
-    """GO-CAM triples, rule audit rows and drug reactions of `documents`.
+    """GO-CAM triples and rule audit rows of `documents`.
 
     Routing is by span_threshold and local_threshold alone (see the
     module docstring): documents with more than `span_threshold` spans
@@ -413,10 +411,7 @@ def run_pipeline(
         # materialized when it exists (below), so the no-skew corpus
         # pays no routing materialization job per run.
         ts, audit_s = _split_audit(_fused(small, prepared))
-        empty_drugs = documents.sparkSession.createDataFrame(
-            [], "model_id string, reaction string"
-        )
-        return PipelineResult(triples=ts, audit=audit_s, drug_reactions=empty_drugs)
+        return PipelineResult(triples=ts, audit=audit_s)
     # mega docs present: materialize the routed big-doc slice ONCE —
     # without this every job of the distributed branch (span-parse
     # checkpoint, rule probes) re-scans the WHOLE corpus' spans
@@ -440,7 +435,6 @@ def run_pipeline(
     return PipelineResult(
         triples=ts.unionByName(rb.triples),
         audit=audit_s.unionByName(rb.audit.select(*_AUDIT_COLS)),
-        drug_reactions=rb.drug_reactions,
     )
 
 

@@ -368,10 +368,10 @@ def causal_formats(t: DataFrame, ancestors: DataFrame) -> DataFrame:
     The reference dedupes multi-relation pairs by Java iteration order
     (first relation seen wins, :515); here the tie-break is the MINIMUM
     relation id per pair — deterministic, and the pair count per model
-    is identical."""
-    rx = _reaction_nodes(t, ancestors).filter("rx").select(
-        "model_id", F.col("node").alias("reaction")
-    )
+    is identical. Both pair ends are checked against the converted-
+    reaction frame in ONE semi join over the pairs in long form (one row
+    per end), so that frame is built once."""
+    rx = _reaction_nodes(t, ancestors).filter("rx").select("model_id", "node")
     direct = t.filter(F.col("pred").isin(CAUSAL_FAMILY)).select(
         "model_id", F.col("subj").alias("up"), "pred", F.col("obj").alias("down")
     )
@@ -392,14 +392,16 @@ def causal_formats(t: DataFrame, ancestors: DataFrame) -> DataFrame:
         )
         .select("model_id", "up", "pred", "down")
     )
+    # end bit 1 = up, 2 = down: a pair survives when both ends did
+    ends = F.array(F.struct(F.col("up").alias("node"), F.lit(1).alias("end")),
+                   F.struct(F.col("down").alias("node"), F.lit(2).alias("end")))
     pairs = (
         direct.unionByName(hop)
-        .join(rx.withColumnRenamed("reaction", "up"), ["model_id", "up"],
-              "left_semi")
-        .join(rx.withColumnRenamed("reaction", "down"), ["model_id", "down"],
-              "left_semi")
+        .select("model_id", "up", "pred", "down", F.inline(ends))
+        .join(rx, ["model_id", "node"], "left_semi")
         .groupBy("model_id", "up", "down")
-        .agg(F.min("pred").alias("pred"))
+        .agg(F.min("pred").alias("pred"), F.bit_or("end").alias("ends"))
+        .filter(F.col("ends") == 3)
     )
     return pairs.groupBy("model_id", "pred").agg(F.count("*").alias("n_pairs"))
 

@@ -53,6 +53,15 @@ def _fs_write_text(spark: SparkSession, path_str: str, text: str) -> None:
         out.close()
 
 
+def _fs_read_text(spark: SparkSession, path_str: str) -> str:
+    fs, p = _hadoop_fs(spark, path_str)
+    inp = fs.open(p)
+    try:
+        return bytes(inp.readAllBytes()).decode("utf-8")
+    finally:
+        inp.close()
+
+
 def completed_buckets(spark: SparkSession, path: str) -> set[int]:
     lp = _lineage_path(path)
     fs, p = _hadoop_fs(spark, lp)
@@ -74,45 +83,39 @@ def write_triples(
 ) -> dict:
     """Idempotent bucketed write. Returns a summary of what was written
     vs skipped. Data layout: path/data/bucket=N/*.parquet, manifest rows
-    at path/_lineage/bucket=N.json."""
-    done = completed_buckets(spark, path) if resume else set()
-    t = _with_bucket(triples, buckets)
-    if done:
-        t = t.filter(~F.col("bucket").isin(sorted(done)))
-    t = t.cache()
-
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    t.write.partitionBy("bucket").mode("overwrite").parquet(os.path.join(path, "data"))
-
-    # per-partition lineage manifest: models, triples, per-rule counts
-    lineage = t.groupBy("bucket").agg(
-        F.countDistinct("model_id").alias("n_models"),
-        F.count("*").alias("n_triples"),
-    )
-    rule_counts = (
-        t.groupBy("bucket", "rule").count()
+    at path/_lineage/bucket=N.json, counted by one aggregate over the
+    buckets that landed. Dynamic overwrite is an option of this write
+    alone; the session's partitionOverwriteMode is left as it was."""
+    done = sorted(completed_buckets(spark, path)) if resume else []
+    unfinished = ~F.col("bucket").isin(done)
+    data = os.path.join(path, "data")
+    t = _with_bucket(triples, buckets).filter(unfinished)
+    t.write.partitionBy("bucket").mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic").parquet(data)
+    # every bucket outside `done` was just rewritten, so under the resume
+    # contract (a re-run of the same input) the read-back holds exactly
+    # this write's rows; the write's schema spares an inference job and
+    # reads a first write of no rows back as no rows
+    manifest = (
+        spark.read.schema(t.schema).parquet(data).filter(unfinished)
+        .groupBy("bucket", "rule")
+        .agg(F.count("*").alias("n"), F.collect_set("model_id").alias("models"))
         .groupBy("bucket")
-        .agg(F.map_from_entries(F.collect_list(F.struct("rule", "count"))).alias("rule_counts"))
+        .agg(F.size(F.array_distinct(F.flatten(F.collect_list("models"))))
+             .alias("n_models"),
+             F.sum("n").alias("n_triples"),
+             F.map_from_entries(F.collect_list(F.struct("rule", "n")))
+             .alias("rule_counts"))
+        .collect()
     )
-    manifest = lineage.join(rule_counts, "bucket").collect()
-    written = []
     for r in manifest:
-        rec = {
-            "bucket": r["bucket"],
-            "n_models": r["n_models"],
-            "n_triples": r["n_triples"],
-            "rule_counts": dict(r["rule_counts"]),
-        }
-        # FS-API write (parents auto-created): manifests land next to the
-        # data on whatever filesystem the sink targets
-        _fs_write_text(
-            spark,
-            f"{_lineage_path(path)}/bucket={r['bucket']}.json",
-            json.dumps(rec),
-        )
-        written.append(r["bucket"])
-    t.unpersist()
-    return {"written_buckets": sorted(written), "skipped_buckets": sorted(done)}
+        # FS-API write (parents auto-created), next to the data on whatever
+        # filesystem the sink targets; keys sorted because rule_counts'
+        # order comes from collect_list
+        _fs_write_text(spark, f"{_lineage_path(path)}/bucket={r['bucket']}.json",
+                       json.dumps(r.asDict(), sort_keys=True))
+    return {"written_buckets": sorted(r["bucket"] for r in manifest),
+            "skipped_buckets": done}
 
 
 def read_triples(spark: SparkSession, path: str) -> DataFrame:
@@ -312,12 +315,7 @@ def append_snapshot(
     mp = _manifest_path(path, snapshot_id)
     fs, p = _hadoop_fs(spark, mp)
     if fs.exists(p):
-        with_in = fs.open(p)
-        try:
-            raw = bytes(with_in.readAllBytes()).decode("utf-8")
-        finally:
-            with_in.close()
-        return json.loads(raw)
+        return json.loads(_fs_read_text(spark, mp))
     dd = _snap_dir(path, snapshot_id)
     df.write.mode("overwrite").parquet(dd)
     n_rows = spark.read.parquet(dd).count()
@@ -336,16 +334,8 @@ def _read_manifests(spark: SparkSession, path: str) -> list[dict]:
     fs, p = _hadoop_fs(spark, md)
     if not fs.exists(p):
         return []
-    out = []
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
-        if not name.endswith(".json"):
-            continue
-        inp = fs.open(st.getPath())
-        try:
-            out.append(json.loads(bytes(inp.readAllBytes()).decode("utf-8")))
-        finally:
-            inp.close()
+    out = [json.loads(_fs_read_text(spark, st.getPath().toString()))
+           for st in fs.listStatus(p) if st.getPath().getName().endswith(".json")]
     return sorted(out, key=lambda m: m["snapshot_id"])
 
 
@@ -431,15 +421,6 @@ def compact_store(
     }
     _fs_write_text(spark, mp, json.dumps(manifest, sort_keys=True))
     return manifest
-
-
-def _fs_read_text(spark: SparkSession, path_str: str) -> str:
-    fs, p = _hadoop_fs(spark, path_str)
-    inp = fs.open(p)
-    try:
-        return bytes(inp.readAllBytes()).decode("utf-8")
-    finally:
-        inp.close()
 
 
 def expire_snapshots(spark: SparkSession, path: str, keep_from: int) -> dict:

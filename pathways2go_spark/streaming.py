@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from .dims import Dims
 from .ingest import DOCUMENTS_SCHEMA
 from .pipeline import prepare_local_dims, run_pipeline
-from .sinks import write_triples
+from .sinks import _hadoop_fs, write_triples
 
 
 def read_document_stream(
@@ -89,10 +89,7 @@ def read_stream_triples(spark: SparkSession, out_path: str) -> DataFrame | None:
     Enumerates batch directories through the Hadoop FileSystem API (not a
     local glob), so the read-back path works on any filesystem the write
     path supports (HDFS/S3/local)."""
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    path = jvm.org.apache.hadoop.fs.Path(out_path)
-    fs = path.getFileSystem(jsc.hadoopConfiguration())
+    fs, path = _hadoop_fs(spark, out_path)
     if not fs.exists(path):
         # stream produced no batches yet — documented empty result
         return None

@@ -90,16 +90,13 @@ def test_binding_complex_inference_and_steps(spark, anc):
             "INHIBITION") in got
 
 
-def test_fixture_statements_consistent(spark, documents, fixture_paths):
+def test_fixture_statements_consistent(spark, default_run):
     """Structural consistency over the full golden-fixture KG."""
-    import os
-
     from pathways2go_spark.dims import load_dims
-    from pathways2go_spark.pipeline import run_pipeline
+    from tests.conftest import FIXTURE_DIR
 
-    dims = load_dims(spark, os.path.dirname(fixture_paths["documents"]))
-    triples = run_pipeline(spark, documents, dims).triples
-    st = kg_to_biopax(triples, dims.onto_ancestors)
+    dims = load_dims(spark, FIXTURE_DIR)
+    st = kg_to_biopax(default_run.triples, dims.onto_ancestors)
     st.cache()
     by = lambda k, p: st.filter(
         (F.col("bp_kind") == k) & (F.col("prop") == p))

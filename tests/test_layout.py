@@ -92,15 +92,10 @@ def test_layout_circle_and_islands(spark):
     assert pos[("m3", "i2")] == ("island", 450, 20)
 
 
-def test_layout_covers_every_reaction(spark, documents, fixture_paths):
+def test_layout_covers_every_reaction(spark, default_run):
     """Every molecular event in the golden corpus gets exactly one
     coordinate row."""
-    from pathways2go_spark.dims import load_dims
-    from pathways2go_spark.pipeline import run_pipeline
-    from tests.conftest import FIXTURE_DIR
-
-    dims = load_dims(spark, FIXTURE_DIR)
-    res = run_pipeline(spark, documents, dims)
+    res = default_run
     out = layout(res.triples)
     me = (
         res.triples.filter((F.col("pred") == V.TYPE)

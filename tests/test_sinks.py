@@ -6,26 +6,22 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
-from pathways2go_spark.dims import load_dims
-from pathways2go_spark.pipeline import run_pipeline
 from pathways2go_spark.sinks import (
     completed_buckets,
     read_triples,
     write_triples,
+    write_ttl,
 )
-from tests.conftest import FIXTURE_DIR
 
 
 @pytest.fixture(scope="module")
-def triples(spark, documents):
-    dims = load_dims(spark, FIXTURE_DIR)
-    t = run_pipeline(spark, documents, dims).triples
-    t.cache().count()
-    return t
+def triples(default_run):
+    return default_run.triples
 
 
 def _key_set(df):
@@ -72,6 +68,12 @@ def test_crash_resume_is_identical(spark, triples, tmp_path):
     a = _key_set(read_triples(spark, out_once))
     b = _key_set(read_triples(spark, out_resume))
     assert a == b
+    # and the resumed store's manifests are byte-identical to the
+    # one-shot store's
+    lineage = lambda out: {  # noqa: E731
+        p.name: p.read_bytes() for p in Path(out, "_lineage").glob("*.json")
+    }
+    assert lineage(out_resume) == lineage(out_once)
 
 
 def test_resume_through_fs_api_uri(spark, triples, tmp_path):
@@ -99,7 +101,7 @@ def test_skipped_buckets_not_rewritten(spark, triples, tmp_path):
 def test_ttl_roundtrip(spark, triples, tmp_path):
     """K1 TTL export: written per-model turtle lines parse back to the
     exact triple set (GoCAM.java:1873-1886 one-.ttl-per-pathway)."""
-    from pathways2go_spark.sinks import parse_ttl_lines, ttl_lines, write_ttl
+    from pathways2go_spark.sinks import parse_ttl_lines
 
     t = triples.select("model_id", "subj", "pred", "obj").distinct()
     out = str(tmp_path / "ttl")
@@ -108,9 +110,10 @@ def test_ttl_roundtrip(spark, triples, tmp_path):
     models = {r["model_id"] for r in t.select("model_id").distinct().collect()}
     dirs = {d.split("=", 1)[1] for d in os.listdir(out) if d.startswith("model_id=")}
     assert dirs == models
+    # the written files parse back to the triple set (read.text drops
+    # the partition col; the model comes from the line itself)
     lines = spark.read.text(out).withColumnRenamed("value", "line")
-    # read.text drops the partition col; re-parse from the line itself
-    back = parse_ttl_lines(ttl_lines(t))
+    back = parse_ttl_lines(lines)
     assert _key_set(back) == _key_set(t)
     # every written line is a syntactically valid N-Triples line
     import re
@@ -118,6 +121,27 @@ def test_ttl_roundtrip(spark, triples, tmp_path):
     pat = re.compile(r'^<[^ >]+> <[^ >]+> (<[^ >]+>|"[^"]*") \.$')
     for r in lines.collect():
         assert pat.match(r["line"]), r["line"]
+
+
+def test_write_triples_keeps_session_overwrite_mode(spark, tmp_path):
+    """write_triples replaces its buckets with a per-write dynamic
+    overwrite and leaves the session's mode as it was: a later static
+    overwrite of a TTL export still clears the models the new triples
+    lack."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    four = spark.createDataFrame(
+        [(f"m{i}", "n1", "type", "GO_0003674", "", "A1") for i in range(4)],
+        "model_id string, subj string, pred string, obj string, "
+        "evidence string, rule string",
+    )
+    ttl = str(tmp_path / "ttl")
+    write_ttl(four, ttl)
+    write_triples(spark, four, str(tmp_path / "sink"), buckets=2)
+    write_ttl(four.filter(F.col("model_id") == "m0"), ttl)
+    assert sorted(d for d in os.listdir(ttl) if d.startswith("model_id=")) \
+        == ["model_id=m0"]
+    assert spark.conf.get(key) == before
 
 
 def test_ttl_literal_escaping(spark):

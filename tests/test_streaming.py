@@ -11,7 +11,8 @@ from pathways2go_spark.pipeline import precision_recall, run_pipeline
 from pathways2go_spark.streaming import read_stream_triples, start_kg_stream
 
 
-def test_stream_matches_batch(spark, documents, fixture_paths, tmp_path_factory):
+def test_stream_matches_batch(spark, documents, fixture_paths, default_run,
+                              tmp_path_factory):
     base = str(tmp_path_factory.mktemp("stream"))
     docs_dir = os.path.join(base, "docs")
     out_dir = os.path.join(base, "out")
@@ -36,8 +37,7 @@ def test_stream_matches_batch(spark, documents, fixture_paths, tmp_path_factory)
     q.awaitTermination(300)
 
     streamed = read_stream_triples(spark, out_dir)
-    batch = run_pipeline(spark, documents, dims).triples
-    pr = precision_recall(streamed, batch)
+    pr = precision_recall(streamed, default_run.triples)
     assert pr["precision"] == 1.0 and pr["recall"] == 1.0, pr
 
 
